@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .cache import corpus_id, memo
 from .config import DEFAULT_CONFIG, EngineConfig
 
 TABLES = (
@@ -67,38 +68,18 @@ MEASURE_COLS: dict[str, tuple[str, ...]] = {
 }
 
 
-# Per-(file, mtime) dirtiness memo: gating wraps columns in CASE, which
+# Per-file-version dirtiness memo: gating wraps columns in CASE, which
 # costs parquet predicate pushdown on exactly the columns users filter
 # (a measure-range scan predicate stops reaching PushedFilters). A
 # healthy corpus — the overwhelmingly common case — must not pay that,
 # so the gate engages ONLY when the feed actually contains a
 # non-representable value (the similarity `_dup_vec_ids` convention:
 # zero plan impact on clean data). The probe is one column-pruned
-# LIMIT-1 scan per (table, file version) per process; the oracle
+# LIMIT-1 scan per (table, corpus_id) per process (cache.py); the oracle
 # mirrors are unconditional CASE views whose identity on clean data
 # keeps the two sides equal either way.
-_DIRTY_MEMO: dict[tuple, bool] = {}
-
-
-def _memo_key(sf_dir: str, name: str, kind: str) -> tuple:
-    # ns-resolution mtime + size (r13 ADVICE): int-seconds mtime let a
-    # corpus regenerated in place within the same second keep a stale
-    # "clean" verdict for the process lifetime — the Spark gate stays
-    # off while the oracle mirrors are unconditional, a silent hash-red.
-    import os
-
-    p = os.path.abspath(os.path.join(sf_dir, f"{name}.parquet"))
-    try:
-        st = os.stat(p)
-        mt, size = st.st_mtime_ns, st.st_size
-    except OSError:
-        mt, size = -1, -1
-    return (p, mt, size, kind)
-
-
 def _measures_dirty(spark: SparkSession, sf_dir: str, name: str) -> bool:
-    key = _memo_key(sf_dir, name, "measures")
-    if key not in _DIRTY_MEMO:
+    def build() -> bool:
         df = _normalize_decimals(
             spark.read.parquet(f"{sf_dir}/{name}.parquet")
         )
@@ -106,16 +87,17 @@ def _measures_dirty(spark: SparkSession, sf_dir: str, name: str) -> bool:
         # legal inputs: gate only the measure columns actually present.
         cols = [c for c in MEASURE_COLS[name] if c in df.columns]
         if not cols:
-            _DIRTY_MEMO[key] = False
             return False
-        df = df.select(*cols)
         bad = None
         for col in cols:
             cd = F.col(col).cast("double")
             b = F.isnan(cd) | (F.abs(cd) > MEASURE_ABS_MAX)
             bad = b if bad is None else (bad | b)
-        _DIRTY_MEMO[key] = df.where(bad).limit(1).count() > 0
-    return _DIRTY_MEMO[key]
+        return df.select(*cols).where(bad).limit(1).count() > 0
+
+    return memo(
+        "measures_dirty", corpus_id(sf_dir, f"{name}.parquet"), (), build
+    )
 
 
 def load_table(
@@ -164,20 +146,10 @@ def scan_spread(
     unaffected. ``min_bytes`` lets a caller skip feeds too small to be
     worth one-task-per-core scheduling (the census spreads only >=1 MB
     tables); CPU-dense per-row kernels (char-trigram RLE) pass 0."""
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            bytes_ = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(path)
-                for f in fs
-            )
-        else:
-            bytes_ = os.path.getsize(path)
-    except OSError:
+    cid = corpus_id(sf_dir, f"{name}.parquet")
+    if not cid:
         return df
+    bytes_ = sum(size for _p, _m, size in cid)
     cores = spark.sparkContext.defaultParallelism
     if cores > 1 and min_bytes <= bytes_ < 128 * 1024 * 1024:
         return df.repartition(cores)
@@ -223,31 +195,17 @@ EVENT_TS_MAX = "2100-01-01 00:00:00"
 
 
 def _events_dirty(spark: SparkSession, sf_dir: str) -> bool:
-    """One LIMIT-1 probe per (events file set, mtimes) per process: does
-    the feed contain a non-representable ts or value? Gating wraps ts
-    and value in CASE, which costs scan-level predicate pushdown on
-    exactly the event-time/value filters — a clean feed (the common
-    case) must not pay that. Reads through the same events* glob the
-    file-stream source uses so batch and streaming agree on the
-    verdict."""
+    """One LIMIT-1 probe per events corpus_id per process: does the feed
+    contain a non-representable ts or value? Gating wraps ts and value in
+    CASE, which costs scan-level predicate pushdown on exactly the
+    event-time/value filters — a clean feed (the common case) must not
+    pay that. Reads through the same events* glob the file-stream source
+    uses so batch and streaming agree on the verdict."""
     import glob as _glob
     import os
 
-    files = sorted(
-        _glob.glob(os.path.join(sf_dir, "events*.parquet"))
-    )
-
-    def _fstat(f: str) -> tuple:
-        try:
-            st = os.stat(f)
-            return (f, st.st_mtime_ns, st.st_size)
-        except OSError:
-            return (f, -1, -1)
-
-    key = (tuple(_fstat(f) for f in files), "events-tsvalue")
-    if not files:
-        return False
-    if key not in _DIRTY_MEMO:
+    def build() -> bool:
+        files = sorted(_glob.glob(os.path.join(sf_dir, "events*.parquet")))
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         if len(files) == 1:
             # events.parquet may be a single FILE or a Spark-written
@@ -275,13 +233,14 @@ def _events_dirty(spark: SparkSession, sf_dir: str) -> bool:
                 )
             )
         if not checks:
-            _DIRTY_MEMO[key] = False
             return False
         bad = checks[0]
         for b in checks[1:]:
             bad = bad | b
-        _DIRTY_MEMO[key] = raw.where(bad).limit(1).count() > 0
-    return _DIRTY_MEMO[key]
+        return raw.where(bad).limit(1).count() > 0
+
+    cid = corpus_id(sf_dir, "events*.parquet")
+    return bool(cid) and memo("events_dirty", cid, (), build)
 
 
 def normalize_event_ts(

@@ -51,4 +51,7 @@ def default_sf_dir() -> str:
 
 
 def default_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` when set (a deployment setting), else the
+    cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))

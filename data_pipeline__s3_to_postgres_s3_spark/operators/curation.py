@@ -1013,7 +1013,7 @@ def cross_source_neardups(
     source inequality prunes last (cheap, non-selective-safe)."""
     from .graph import _minhash_pairs
 
-    pairs = _minhash_pairs(spark, sf_dir, cfg)
+    pairs = _minhash_pairs(spark, sf_dir)
     src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     return (
         pairs.join(
@@ -1111,7 +1111,7 @@ def split_leakage_report(
             .otherwise("test")
         )
 
-    pairs = _minhash_pairs(spark, sf_dir, cfg)
+    pairs = _minhash_pairs(spark, sf_dir)
     return (
         pairs.select(
             "doc_a",

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import corpus_id, memo
 from ..catalog import load_table, scan_spread
 from ..config import DEFAULT_CONFIG, EngineConfig
 
@@ -108,14 +109,7 @@ def dedup_ngram_jaccard(
     nodes in precisely the degenerate corpora the metric exists to
     expose). The DuckDB oracle applies the identical cap, so results stay
     hash-green whenever it binds."""
-    if cfg is DEFAULT_CONFIG and df_cap == NGRAM_DF_CAP:
-        base = _ngram_inter_default(spark, sf_dir)
-    else:
-        docs = scan_spread(
-            spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-        )
-        base = _ngram_inter_counts(docs, df_cap)
-    return _jaccard_projection(base).where(
+    return _jaccard_projection(_ngram_inter(spark, sf_dir, df_cap)).where(
         F.col("jaccard") >= JACCARD_THRESHOLD
     )
 
@@ -126,8 +120,8 @@ def _ngram_inter_counts(docs: DataFrame, df_cap: int) -> DataFrame:
     one shingle in the DF-capped index. dedup_ngram_jaccard,
     jaccard_threshold_sweep and dedup_containment are all pure row-local
     projections of this one frame (jaccard and containment differ only in
-    the denominator), so at the registry defaults it is computed ONCE per
-    corpus via `_ngram_inter_default` below."""
+    the denominator), so it is computed ONCE per corpus via `_ngram_inter`
+    below."""
     arrays = _shingle_arrays(docs)
     sh = arrays.select("doc_id", F.explode("shingles").alias("shingle"))
     # |A| per doc is just the array size — no groupBy-over-exploded-rows
@@ -158,24 +152,24 @@ def _ngram_inter_counts(docs: DataFrame, df_cap: int) -> DataFrame:
     )
 
 
-def _ngram_inter_default(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`_ngram_inter_counts` at the registry defaults (default cfg,
-    NGRAM_DF_CAP), lineage-cut and process-memoized per documents file
-    identity — the graph._minhash_pairs convention applied to the exact
-    family. Time-only and deterministic: every count in the frame is an
-    exact integer, so the downstream jaccard/containment divisions are
-    partitioning- and order-invariant, and the DuckDB oracles recompute
-    the index from data every run (a stale entry would hash-red
-    immediately). Callers with a non-default cfg or df_cap build fresh."""
-    from .graph import _memoized_frame
+def _ngram_inter(spark: SparkSession, sf_dir: str, df_cap: int) -> DataFrame:
+    """`_ngram_inter_counts` over the documents table, lineage-cut and
+    process-memoized per (documents corpus_id, df_cap) — the only inputs
+    the frame reads (cache.py). Time-only and deterministic: every count
+    in the frame is an exact integer, so the downstream
+    jaccard/containment divisions are partitioning- and order-invariant,
+    and the DuckDB oracles recompute the index from data every run (a
+    stale entry would hash-red immediately)."""
 
     def build() -> DataFrame:
         docs = scan_spread(
             spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
         )
-        return _ngram_inter_counts(docs, NGRAM_DF_CAP).localCheckpoint()
+        return _ngram_inter_counts(docs, df_cap).localCheckpoint()
 
-    return _memoized_frame(spark, sf_dir, "ngram_inter", build)
+    return memo(
+        "ngram_inter", corpus_id(sf_dir, "documents.parquet"), (df_cap,), build
+    )
 
 
 def _jaccard_projection(base: DataFrame) -> DataFrame:
@@ -186,14 +180,6 @@ def _jaccard_projection(base: DataFrame) -> DataFrame:
         F.col("n_a") + F.col("n_b") - F.col("n_inter")
     )
     return base.select("doc_a", "doc_b", jac.alias("jaccard"))
-
-
-def _ngram_pair_jaccard(docs: DataFrame, df_cap: int) -> DataFrame:
-    """The UNTHRESHOLDED pair-similarity frame behind dedup_ngram_jaccard:
-    (doc_a, doc_b, jaccard) for every pair sharing at least one shingle in
-    the DF-capped inverted index. Kept for non-default callers; the
-    registry-default consumers go through `_ngram_inter_default`."""
-    return _jaccard_projection(_ngram_inter_counts(docs, df_cap))
 
 
 def _ceil_threshold_mult(threshold: float) -> F.Column:
@@ -390,13 +376,7 @@ def dedup_containment(
 
     containment = n_inter/n_inner is a single int/int IEEE division —
     deterministic across engines (CLAUDE.md float rule)."""
-    if cfg is DEFAULT_CONFIG and df_cap == NGRAM_DF_CAP:
-        base = _ngram_inter_default(spark, sf_dir)
-    else:
-        docs = scan_spread(
-            spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
-        )
-        base = _ngram_inter_counts(docs, df_cap)
+    base = _ngram_inter(spark, sf_dir, df_cap)
     c_ab = F.col("n_inter").cast("double") / F.col("n_a")
     c_ba = F.col("n_inter").cast("double") / F.col("n_b")
     directed = F.explode(
@@ -1456,21 +1436,16 @@ def jaccard_threshold_sweep(
     Scale design: the pair frame is dedup_ngram_jaccard's DF-capped
     inverted-index expansion (never all-pairs), lineage-cut because BOTH
     the pair census and the per-doc max-similarity census consume it
-    (the shared-subtree re-execution class, CLAUDE.md) — at the registry
-    defaults it is the process-memoized `_ngram_inter_default` frame the
-    whole exact-similarity family shares. The 13-row threshold grid is
+    (the shared-subtree re-execution class, CLAUDE.md) — it is the
+    process-memoized `_ngram_inter` frame the whole exact-similarity
+    family shares. The 13-row threshold grid is
     BROADCAST into theta-joins that stream the pair frame — grid side
     tiny by construction, pair side never broadcast or collected. Empty
     thresholds survive via grid LEFT JOIN + coalesce(0), so the row count
     is fixed at len(grid) on any corpus.
     """
     docs = load_table(spark, sf_dir, "documents")
-    if cfg is DEFAULT_CONFIG:
-        pairs = _jaccard_projection(_ngram_inter_default(spark, sf_dir))
-    else:
-        pairs = _ngram_pair_jaccard(docs, NGRAM_DF_CAP).localCheckpoint(
-            eager=False
-        )
+    pairs = _jaccard_projection(_ngram_inter(spark, sf_dir, NGRAM_DF_CAP))
     grid = spark.createDataFrame(
         [(i,) for i in SWEEP_GRID_HUNDREDTHS], "grid_i int"
     ).select(

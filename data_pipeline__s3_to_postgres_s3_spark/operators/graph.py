@@ -28,72 +28,40 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import corpus_id, memo
 from ..catalog import load_table
 from ..config import DEFAULT_CONFIG, EngineConfig
 
 CC_MAX_ITER = 50
 
-# Process-level memo of (LSH pair frame, CC labels frame) per corpus
-# file identity — the similarity._index_meta convention extended to the
-# dedup-cluster family (r15): dedup_clusters, dedup_keep_best and
-# dedup_cluster_report each ran the FULL MinHash pipeline plus the
-# iterative closure from scratch (~5-8 s of driver-looped rounds each
-# at sf0.1), yet all three are pure functions of the same documents
-# file. Time-only and deterministic: the DuckDB oracles recompute the
-# closure from data every run, so a stale entry would hash-red
-# immediately. Keys carry ns-mtime+size (the r13 catalog convention)
-# AND the Spark applicationId — the cached frames are eager
-# localCheckpoints whose blocks die with their SparkContext.
-_MINHASH_CC_MEMO: dict = {}
-
-
-def _memoized_frame(spark: SparkSession, sf_dir: str, kind: str, build):
-    """One lineage-cut DataFrame per (documents file identity, kind,
-    SparkContext) — see the module comment above for why this is safe."""
-    from ..catalog import _memo_key
-
-    key = _memo_key(sf_dir, "documents", kind) + (
-        spark.sparkContext.applicationId,
-    )
-    if key not in _MINHASH_CC_MEMO:
-        stale = [
-            k
-            for k in _MINHASH_CC_MEMO
-            if k[0] == key[0] and k[3] == kind and k != key
-        ]
-        for k in stale:
-            del _MINHASH_CC_MEMO[k]
-        _MINHASH_CC_MEMO[key] = build()
-    return _MINHASH_CC_MEMO[key]
-
-
-def _minhash_pairs(spark: SparkSession, sf_dir: str, cfg) -> DataFrame:
+# The LSH pair frame and its CC labels, memoized per documents
+# corpus_id (cache.py): without it dedup_clusters, dedup_keep_best,
+# dedup_cluster_report and the curation consumers each run the FULL
+# MinHash pipeline plus the iterative closure (~5-8 s of driver-looped
+# rounds each at sf0.1), yet all are pure functions of the same
+# documents file — and of nothing else (dedup_minhash_lsh reads no cfg
+# field), so the memo takes no params.
+def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verified LSH pair frame, lineage-cut and process-memoized
     (consumers: the cluster family below + cross_source_neardups)."""
     from .dedup import dedup_minhash_lsh
 
-    if cfg is not DEFAULT_CONFIG:
-        # Only the registry's shared config memoizes — a caller with a
-        # custom cfg gets a fresh computation (no key ambiguity).
-        return dedup_minhash_lsh(spark, sf_dir, cfg).localCheckpoint()
-    return _memoized_frame(
-        spark,
-        sf_dir,
+    return memo(
         "minhash_pairs",
-        lambda: dedup_minhash_lsh(spark, sf_dir, cfg).localCheckpoint(),
+        corpus_id(sf_dir, "documents.parquet"),
+        (),
+        lambda: dedup_minhash_lsh(spark, sf_dir).localCheckpoint(),
     )
 
 
-def _minhash_cc(spark: SparkSession, sf_dir: str, cfg) -> tuple:
+def _minhash_cc(spark: SparkSession, sf_dir: str) -> tuple:
     """(pairs, labels): the verified LSH pair frame (lineage-cut) and
     its connected-components labels, shared by the cluster family."""
-    pairs = _minhash_pairs(spark, sf_dir, cfg)
-    if cfg is not DEFAULT_CONFIG:
-        return pairs, connected_components(pairs.select("doc_a", "doc_b"))
-    labels = _memoized_frame(
-        spark,
-        sf_dir,
+    pairs = _minhash_pairs(spark, sf_dir)
+    labels = memo(
         "minhash_cc",
+        corpus_id(sf_dir, "documents.parquet"),
+        (),
         lambda: connected_components(pairs.select("doc_a", "doc_b")),
     )
     return pairs, labels
@@ -168,7 +136,7 @@ def dedup_clusters(
     the output total-on-documents, so `WHERE is_canonical` is the full
     deduplicated corpus, not just the untouched docs.
     """
-    _pairs, cc = _minhash_cc(spark, sf_dir, cfg)
+    _pairs, cc = _minhash_cc(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     labeled = docs.join(cc, docs["doc_id"] == cc["node"], "left").select(
         "doc_id", F.coalesce("comp", "doc_id").alias("cluster_id")
@@ -302,7 +270,7 @@ def dedup_cluster_report(
     is portable_round-ed at 1e-6 (distributed-avg class)."""
     from ..functions.numeric import portable_round
 
-    pairs, cc = _minhash_cc(spark, sf_dir, cfg)
+    pairs, cc = _minhash_cc(spark, sf_dir)
     members = cc.select(
         F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
     )

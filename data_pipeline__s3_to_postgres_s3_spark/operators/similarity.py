@@ -29,56 +29,31 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import corpus_id, memo
 from ..catalog import load_table
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.numeric import portable_round
 
-# Index-metadata memo (r10): PQ codebooks, IVF centroids, and the corpus
-# dimension are DETERMINISTIC functions of the embeddings file, collected
-# to the driver as bounded metadata (M·K / nlist·d rows, one scalar). A
-# deployment trains an index once and serves many queries from it; this
-# cache is that amortization inside one process — time-only, never
-# semantics (the DuckDB oracles retrain from the data every run, so a
-# stale entry would hash-red immediately). Keyed on the embeddings
-# file's (absolute path, mtime): a corpus regenerated in-place drops the
-# entry; distinct tmp corpora never collide. Values are plain tuples so
-# a cached entry can rebuild a frame in any SparkSession.
-_INDEX_META_CACHE: dict[tuple, object] = {}
-
-
-def _index_meta(sf_dir: str, kind: str, build):
-    try:
-        p = os.path.join(sf_dir, "embeddings.parquet")
-        key = (kind, os.path.abspath(p), os.path.getmtime(p))
-    except OSError:
-        return build()
-    if key not in _INDEX_META_CACHE:
-        # r10 ADVICE: evict superseded entries for the same (kind, path)
-        # on insert — a corpus regenerated in-place (or the many tmp
-        # corpora a pytest session creates under a reused path) must not
-        # accumulate dead codebook/centroid rows for the process lifetime.
-        stale = [
-            k
-            for k in _INDEX_META_CACHE
-            if k[0] == key[0] and k[1] == key[1] and k[2] != key[2]
-        ]
-        for k in stale:
-            del _INDEX_META_CACHE[k]
-        _INDEX_META_CACHE[key] = build()
-    return _INDEX_META_CACHE[key]
+# Index metadata — PQ codebooks, IVF centroids, the corpus dimension,
+# the append watermarks — are DETERMINISTIC functions of the embeddings
+# file, collected to the driver as bounded values (M·K / nlist·d rows,
+# one scalar). A deployment trains an index once and serves many queries
+# from it; cache.memo over the embeddings corpus_id is that amortization
+# inside one process. Values are plain tuples/rows so a cached entry can
+# rebuild a frame in any SparkSession.
+_EMB = "embeddings.parquet"
 
 
 def _corpus_dim(spark: SparkSession, sf_dir: str):
     """The corpus dimensionality — max embedding length over the RAW
-    table — memoized per (file, mtime). The ONE definition of the 'dim'
-    memo (r10 ADVICE: call sites used to re-declare the build lambda
-    over their already-filtered frames; they agreed with _embeddings
-    only because the chokepoint populates the shared cache key first,
-    and under the OSError fallback the definitions could fork and the
-    collect re-ran per call)."""
-    return _index_meta(
-        sf_dir,
+    table — memoized per embeddings corpus_id. The ONE definition of the
+    'dim' memo (r10 ADVICE: call sites used to re-declare the build
+    lambda over their already-filtered frames, and the definitions could
+    fork)."""
+    return memo(
         "dim",
+        corpus_id(sf_dir, _EMB),
+        (),
         lambda: load_table(spark, sf_dir, "embeddings")
         .agg(F.max(F.size("embedding")))
         .collect()[0][0],
@@ -223,7 +198,7 @@ def _dup_vec_ids(spark: SparkSession, sf_dir: str):
             return None
         return tuple(r[0] for r in rows)
 
-    return _index_meta(sf_dir, "dup_vec_ids", build)
+    return memo("dup_vec_ids", corpus_id(sf_dir, _EMB), (), build)
 
 
 def similarity_bruteforce_topk(
@@ -554,8 +529,11 @@ def similarity_ivf_topk(
     # crossJoin+groupBy+join formulation paid 5 exchanges incl. an N×N
     # sort-merge join; this plan's only exchange is the final top-k window
     # (r02: 18.6 s → see BENCH_r04).
-    cent_rows = _index_meta(
-        sf_dir, "ivf_centroids", lambda: ivf_centroids(emb).collect()
+    cent_rows = memo(
+        "ivf_centroids",
+        corpus_id(sf_dir, _EMB),
+        (),
+        lambda: ivf_centroids(emb).collect(),
     )
     dists = _dist_structs(_inline_centroids(cent_rows, "int"))
     scored = emb.withColumn("dists", dists)
@@ -1524,7 +1502,7 @@ def _pq_train_rows(spark: SparkSession, subs: DataFrame) -> list[tuple]:
     rows — M·K tuples, materialized from collected rows each round so
     the iterative consumers never recompile the whole lineage (the
     kmeans broadcast-frame lesson, not the literal-inline one); callers
-    memoize them through _index_meta, the way a deployment trains a
+    memoize them through cache.memo, the way a deployment trains a
     codebook once and serves every query from it."""
     seeds = subs.where(F.col("vec_id") < PQ_K).select(
         "m",
@@ -1557,13 +1535,16 @@ def _pq_train_rows(spark: SparkSession, subs: DataFrame) -> list[tuple]:
 def _pq_codebook(
     spark: SparkSession, sf_dir: str, subs: DataFrame, kind: str = "pq_codebook"
 ) -> DataFrame:
-    """The trained codebook as a broadcastable frame, memoized per corpus
-    file (_index_meta) — training is deterministic from the data, so the
-    memo is time-only and the retraining DuckDB oracles stay exact.
+    """The trained codebook as a broadcastable frame, memoized per
+    embeddings corpus_id (cache.py) — training is deterministic from the
+    data, so the memo is time-only and the retraining DuckDB oracles
+    stay exact.
     ``kind`` scopes the memo row (ann_index_append trains a base-rows
     codebook under "pq_codebook_base" — it must never share a cache row
     with the full-corpus one)."""
-    rows = _index_meta(sf_dir, kind, lambda: _pq_train_rows(spark, subs))
+    rows = memo(
+        kind, corpus_id(sf_dir, _EMB), (), lambda: _pq_train_rows(spark, subs)
+    )
     return spark.createDataFrame(rows, _PQ_CENTS_SCHEMA)
 
 
@@ -1721,8 +1702,11 @@ def ivf_pq_topk(
     sub = dim // PQ_M
     # Coarse quantizer: literal-inlined centroid index (one-shot query —
     # the IVF lesson), nearest cell + probe list as row-local array exprs.
-    cent_rows = _index_meta(
-        sf_dir, "ivf_centroids", lambda: ivf_centroids(emb).collect()
+    cent_rows = memo(
+        "ivf_centroids",
+        corpus_id(sf_dir, _EMB),
+        (),
+        lambda: ivf_centroids(emb).collect(),
     )
     dists = _dist_structs(_inline_centroids(cent_rows, "int"))
     scored = emb.withColumn("dists", dists)
@@ -2107,7 +2091,7 @@ def embedding_corr_topk(
 # ---------------------------------------------------------------------------
 # Persisted ANN index artifact (r10 VERDICT #2): train once, serve many.
 # ---------------------------------------------------------------------------
-# _index_meta amortizes training within one process; a production
+# cache.memo amortizes training within one process; a production
 # 1B-vector deployment goes one step further and PERSISTS the trained
 # index as tables — codebooks, coarse centroids, and the per-vector code
 # table — then serves every query job from the artifact without touching
@@ -2116,7 +2100,8 @@ def embedding_corr_topk(
 # destination, not the job (extract_load_transform_data_pipeline.py.py:95-101).
 ANN_ARTIFACT_ROOT = os.path.join(tempfile.gettempdir(), "spark_graft_ann")
 _ANN_COMPONENTS = ("pq_codebook", "ivf_centroids", "codes")
-# The current artifact directory layout: {key12}_{mtime}_{token8}.
+# The current artifact directory layout: {key12}_{ident}_{token8}, where
+# ident is a decimal digest of the embeddings corpus_id.
 _ANN_DIR_RE = re.compile(r"^[0-9a-f]{12}_\d+_[0-9a-f]{8}$")
 # The KNOWN pre-r12 layout ({md5_32}_{mtime}, no trainer token) — the
 # ONLY shape the write-side sweep deletes as legacy (r13 ADVICE: an
@@ -2144,7 +2129,10 @@ _ANN_LEGACY_DIR_RE = re.compile(r"^[0-9a-f]{32}_\d+$")
 # segment stack in ONE pass and writes segments as row-local vec_id
 # filters of it — content-identical (encoding is row-local; filtering
 # commutes), bumped per the mechanical discipline (the rev-2 precedent).
-_ANN_TRAINER_REV = 6
+# rev 7: the trainer memos read through cache.memo over the embeddings
+# corpus_id instead of the module's own mtime-keyed dict — content-
+# identical, bumped per the mechanical discipline.
+_ANN_TRAINER_REV = 7
 
 # Every function whose LOGIC determines persisted-artifact CONTENT or
 # layout (training, encoding, the base/delta split, the directory
@@ -2194,18 +2182,20 @@ def _ann_version_token() -> str:
 
 
 def _ann_artifact_dir(sf_dir: str, scope: str = "full") -> str:
-    """Artifact location, keyed by (corpus path hash + scope, mtime,
-    trainer version): a corpus regenerated in place — or a trainer edit —
-    gets a NEW directory. Staleness is structural, never a runtime check
+    """Artifact location, keyed by (corpus path hash + scope, corpus_id
+    digest, trainer version): a corpus regenerated in place — even within
+    the same second: corpus_id carries ns mtime and size — or a trainer
+    edit gets a NEW directory. Staleness is structural, never a runtime check
     on served results. ``scope`` names the training row set ("full" =
     the whole corpus; "base" = rows at or below the append watermark —
     ann_index_append's yesterday-corpus index) and is folded into the
     directory KEY so the two artifacts are never eviction siblings."""
     p = os.path.abspath(os.path.join(sf_dir, "embeddings.parquet"))
     key = hashlib.md5(f"{scope}|{p}".encode()).hexdigest()[:12]
+    ident = hashlib.md5(repr(corpus_id(sf_dir, _EMB)).encode()).hexdigest()
     return os.path.join(
         ANN_ARTIFACT_ROOT,
-        f"{key}_{int(os.path.getmtime(p))}_{_ann_version_token()}",
+        f"{key}_{int(ident[:12], 16)}_{_ann_version_token()}",
     )
 
 
@@ -2231,8 +2221,11 @@ def _ann_build_frames(
     # type-stable; the oracle validity CTEs are empty too.
     dim = _corpus_dim(spark, sf_dir) or PQ_M
     sub = dim // PQ_M
-    cent_rows = _index_meta(
-        sf_dir, f"ivf_centroids{suffix}", lambda: ivf_centroids(emb).collect()
+    cent_rows = memo(
+        f"ivf_centroids{suffix}",
+        corpus_id(sf_dir, _EMB),
+        (),
+        lambda: ivf_centroids(emb).collect(),
     )
     subs = _ann_cell_subspaces(emb, cent_rows, sub)
     cents = _pq_codebook(spark, sf_dir, subs, kind=f"pq_codebook{suffix}")
@@ -2285,8 +2278,8 @@ def _ann_write_artifact(
     filesystem op — a concurrent reader (pytest beside the driver) sees
     either the previous complete artifact or the new one, never a
     half-written directory (r11 ADVICE). Superseded siblings of the same
-    corpus (older mtime or other trainer version — the _index_meta
-    eviction rule, on disk) are evicted only AFTER the rename."""
+    corpus (older corpus_id or other trainer version — the cache.memo
+    supersede rule, on disk) are evicted only AFTER the rename."""
     art = _ann_artifact_dir(sf_dir, scope)
     tmp = f"{art}.tmp-{os.getpid()}"
     shutil.rmtree(tmp, True)
@@ -2332,7 +2325,7 @@ def _ann_write_artifact(
 def _ensure_ann_artifact(
     spark: SparkSession, sf_dir: str, scope: str = "full"
 ) -> str:
-    """Read-through: serve from the current-mtime artifact if complete,
+    """Read-through: serve from the current-corpus artifact if complete,
     else build it (so the serve query is self-contained for the driver,
     which runs registry entries in any order)."""
     art = _ann_artifact_dir(sf_dir, scope)
@@ -2382,7 +2375,7 @@ _ANN_IVFC_SCHEMA = "cell int, centroid array<double>"
 
 def _ann_append_watermark(spark: SparkSession, sf_dir: str):
     """floor(0.9 · max(vec_id)) over the VALID corpus, memoized per
-    (file, mtime); None when the corpus has no valid rows. The double
+    corpus_id; None when the corpus has no valid rows. The double
     multiply-then-floor matches the oracle's
     FLOOR(0.9 * CAST(MAX(vec_id) AS DOUBLE)) bit-for-bit."""
     import math
@@ -2393,11 +2386,11 @@ def _ann_append_watermark(spark: SparkSession, sf_dir: str):
             return None
         return int(math.floor(APPEND_WM_FRAC * float(mx)))
 
-    return _index_meta(sf_dir, "append_wm", build)
+    return memo("append_wm", corpus_id(sf_dir, _EMB), (), build)
 
 
 def _ann_max_vec_id(spark: SparkSession, sf_dir: str):
-    """MAX(vec_id) over the valid corpus, memoized per (file, mtime);
+    """MAX(vec_id) over the valid corpus, memoized per corpus_id;
     None on an empty/all-invalid corpus. The anchor for every stacked
     watermark and the stack report's upper bound."""
 
@@ -2406,7 +2399,7 @@ def _ann_max_vec_id(spark: SparkSession, sf_dir: str):
             _embeddings(spark, sf_dir).agg(F.max("vec_id")).collect()[0][0]
         )
 
-    return _index_meta(sf_dir, "max_vec_id", build)
+    return memo("max_vec_id", corpus_id(sf_dir, _EMB), (), build)
 
 
 def _ann_stack_watermark2(spark: SparkSession, sf_dir: str):
@@ -2423,7 +2416,7 @@ def _ann_stack_watermark2(spark: SparkSession, sf_dir: str):
             return None
         return int(math.floor(APPEND_WM2_FRAC * float(mx)))
 
-    return _index_meta(sf_dir, "append_wm2", build)
+    return memo("append_wm2", corpus_id(sf_dir, _EMB), (), build)
 
 
 def _ann_segment_bounds(

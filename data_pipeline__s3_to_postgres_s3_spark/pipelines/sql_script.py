@@ -48,12 +48,12 @@ from __future__ import annotations
 import datetime as dt
 import os
 import re
-import weakref
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import corpus_id, memo
 from ..config import DEFAULT_CONFIG, EngineConfig
 
 DEFAULT_SEARCH_SCHEMAS = ("staging", "analytics", "if_common")
@@ -511,25 +511,20 @@ SCRIPT_PATH = os.path.join(
     os.path.dirname(__file__), "..", "sql", "analytics_transform.sql"
 )
 
-# The three driver-gated twins each need the same script run; analysis of
-# the 3-statement script costs ~1s of driver time, so memoize the LAZY
-# table plans per session × (sf_dir, cfg). Plans execute per query as
-# usual — only the parse/analyze work is shared. WeakKey on the session:
-# plans die with their session, and a dead session's entries go with it.
-_TABLES_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
 def script_transform_tables(
     spark: SparkSession, sf_dir: str, cfg: EngineConfig = DEFAULT_CONFIG
 ) -> dict[str, DataFrame]:
-    per_session = _TABLES_MEMO.setdefault(spark, {})
-    key = (sf_dir, repr(cfg))
-    got = per_session.get(key)
-    if got is None:
-        got = per_session[key] = _script_transform_tables(spark, sf_dir, cfg)
-    return got
+    """The three driver-gated twins each need the same script run;
+    analysis of the 3-statement script costs ~1s of driver time, so the
+    LAZY table plans are memoized per (corpus_id of every table, cfg).
+    Plans execute per query as usual — only the parse/analyze work is
+    shared, and a corpus rewritten in place rebuilds them."""
+    return memo(
+        "sql_script_tables",
+        corpus_id(sf_dir, "*.parquet"),
+        (repr(cfg),),
+        lambda: _script_transform_tables(spark, sf_dir, cfg),
+    )
 
 
 def _script_transform_tables(

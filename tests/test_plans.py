@@ -250,7 +250,7 @@ def test_dedup_containment_mirrors_jaccard_shape(spark, sf_dir):
     + pair groupBy) and emit both directions from ONE intersection row —
     a union-of-two-branches plan would double the index subtree. Both
     registry queries are now row-local projections of the process-memoized
-    `_ngram_inter_default` frame (lineage-cut), so the shape pin runs on
+    `_ngram_inter` frame (lineage-cut), so the shape pin runs on
     the RAW builder the memo executes."""
     from data_pipeline__s3_to_postgres_s3_spark.catalog import load_table
     from data_pipeline__s3_to_postgres_s3_spark.operators.dedup import (

@@ -241,3 +241,47 @@ def test_flagship_is_first_family():
     names = list(QUERIES)
     assert names[0] == "agg_public_holiday"
     assert "best_performing_product" in names[:10]  # entry() runs this
+
+
+_MEMO_FACTORIES = {
+    "dict",
+    "OrderedDict",
+    "defaultdict",
+    "WeakKeyDictionary",
+    "WeakValueDictionary",
+}
+
+
+def _is_memo_value(node) -> bool:
+    """An empty mapping bound at module level: a process memo by
+    construction (constant lookup tables are non-empty literals)."""
+    import ast
+
+    if isinstance(node, ast.Dict):
+        return not node.keys
+    if isinstance(node, ast.Call):
+        f = node.func
+        name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+        if name == "dict":
+            return not node.args and not node.keywords
+        return name in _MEMO_FACTORIES
+    return False
+
+
+def test_process_memos_live_only_in_cache_module():
+    """One corpus identity, one memo: no package module but cache.py may
+    bind a module-level dict / WeakKeyDictionary memo — a second one
+    would bring back its own staleness rule and its own eviction leak."""
+    import ast
+
+    pkg = REPO / "data_pipeline__s3_to_postgres_s3_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "cache.py":
+            continue
+        for node in ast.parse(path.read_text(encoding="utf-8")).body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)) and (
+                node.value is not None and _is_memo_value(node.value)
+            ):
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not offenders, f"module-level memo outside cache.py: {offenders}"

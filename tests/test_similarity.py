@@ -737,33 +737,30 @@ def test_index_meta_cache_evicts_superseded_mtime(tmp_path):
     codebook/centroid rows for the process lifetime."""
     import os
 
-    from data_pipeline__s3_to_postgres_s3_spark.operators import (
-        similarity as sim,
-    )
+    from data_pipeline__s3_to_postgres_s3_spark import cache
 
     p = tmp_path / "embeddings.parquet"
     p.write_bytes(b"x")
     abspath = os.path.abspath(str(p))
 
-    assert sim._index_meta(str(tmp_path), "probe_kind", lambda: "v1") == "v1"
+    def meta(build):
+        cid = cache.corpus_id(str(tmp_path), "embeddings.parquet")
+        return cache.memo("probe_kind", cid, (), build)
+
+    assert meta(lambda: "v1") == "v1"
     # Cache hit: the build must not run again for the same mtime.
     sentinel = []
-    assert (
-        sim._index_meta(
-            str(tmp_path), "probe_kind", lambda: sentinel.append(1) or "v2"
-        )
-        == "v1"
-    )
+    assert meta(lambda: sentinel.append(1) or "v2") == "v1"
     assert not sentinel
 
     # Regenerate in place: new mtime → rebuild AND the old entry evicted.
     st = os.stat(str(p))
     os.utime(str(p), (st.st_atime + 10, st.st_mtime + 10))
-    assert sim._index_meta(str(tmp_path), "probe_kind", lambda: "v3") == "v3"
+    assert meta(lambda: "v3") == "v3"
     live = [
         k
-        for k in sim._INDEX_META_CACHE
-        if k[0] == "probe_kind" and k[1] == abspath
+        for k in cache._MEMO
+        if k[0] == "probe_kind" and k[1] == (abspath,)
     ]
     assert len(live) == 1
 
@@ -807,12 +804,10 @@ def test_ann_index_topk_reads_artifact_without_retraining(spark, sf_small, monke
         ),
     )
     # Drop the in-process memo too: the artifact alone must suffice.
-    saved = dict(sim._INDEX_META_CACHE)
-    sim._INDEX_META_CACHE.clear()
-    try:
-        assert sim.ann_index_topk(spark, sf_small).count() > 0
-    finally:
-        sim._INDEX_META_CACHE.update(saved)
+    from data_pipeline__s3_to_postgres_s3_spark import cache
+
+    monkeypatch.setattr(cache, "_MEMO", {})
+    assert sim.ann_index_topk(spark, sf_small).count() > 0
 
 
 def test_ann_artifact_staleness_rebuilds_on_corpus_regeneration(
@@ -820,7 +815,7 @@ def test_ann_artifact_staleness_rebuilds_on_corpus_regeneration(
 ):
     """A corpus regenerated in place (new mtime) must get a NEW artifact
     directory on the next serve, with the superseded sibling evicted —
-    staleness is structural (the _index_meta eviction rule, on disk)."""
+    staleness is structural (the cache.memo supersede rule, on disk)."""
     import os
     import shutil
 
@@ -842,6 +837,32 @@ def test_ann_artifact_staleness_rebuilds_on_corpus_regeneration(
     assert art2 != art1
     assert os.path.exists(os.path.join(art2, "codes", "_SUCCESS"))
     assert not os.path.exists(art1)  # superseded sibling evicted
+
+
+def test_ann_artifact_dir_moves_on_same_second_rewrite(tmp_path):
+    """The artifact key derives from the embeddings corpus_id (ns mtime
+    plus size): a corpus re-stamped within the same second gets a NEW
+    directory — an integer-second mtime key kept serving the old index.
+    The new name keeps the layout and the same-key prefix, so the write
+    side sweeps the superseded directory as a sibling."""
+    import os
+
+    from data_pipeline__s3_to_postgres_s3_spark.operators import (
+        similarity as sim,
+    )
+
+    p = str(tmp_path / "embeddings.parquet")
+    with open(p, "wb") as fh:
+        fh.write(b"x")
+    st = os.stat(p)
+    sec = st.st_mtime_ns // 1_000_000_000 * 1_000_000_000
+    os.utime(p, ns=(st.st_atime_ns, sec + 100_000_000))
+    before = os.path.basename(sim._ann_artifact_dir(str(tmp_path)))
+    os.utime(p, ns=(st.st_atime_ns, sec + 200_000_000))
+    after = os.path.basename(sim._ann_artifact_dir(str(tmp_path)))
+    assert after != before
+    assert sim._ANN_DIR_RE.match(before) and sim._ANN_DIR_RE.match(after)
+    assert after.split("_", 1)[0] == before.split("_", 1)[0]
 
 
 def test_ann_artifact_ignored_and_rebuilt_on_trainer_version_bump(
@@ -961,16 +982,14 @@ def test_ann_index_append_encodes_without_retraining(
             AssertionError("IVF retraining reached during append")
         ),
     )
-    saved = dict(sim._INDEX_META_CACHE)
-    sim._INDEX_META_CACHE.clear()
-    try:
-        rows = {
-            r["component"]: r["n_rows"]
-            for r in sim.ann_index_append(spark, sf_small).collect()
-        }
-        assert rows["appended_ivf"] > 0
-    finally:
-        sim._INDEX_META_CACHE.update(saved)
+    from data_pipeline__s3_to_postgres_s3_spark import cache
+
+    monkeypatch.setattr(cache, "_MEMO", {})
+    rows = {
+        r["component"]: r["n_rows"]
+        for r in sim.ann_index_append(spark, sf_small).collect()
+    }
+    assert rows["appended_ivf"] > 0
 
 
 def test_ann_index_append_empty_delta_is_exact(spark, sf_small, tmp_path):
@@ -1146,6 +1165,9 @@ def test_trainer_source_change_requires_rev_bump():
         # it selects which rows reach the delta encode (no logic change;
         # membership-only edit, artifacts retrain once on the new key).
         6: "346dda5516bfe6dc86145841e3b4e3c0",
+        # rev 7: trainer memos read through cache.memo over the
+        # embeddings corpus_id (content-identical).
+        7: "34d4cf8b0e5a8aecbad2e197f48890d0",
     }
     assert sim._ANN_TRAINER_REV in PINNED and (
         PINNED[sim._ANN_TRAINER_REV] == digest
