@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_events, load_table, scan_spread
 from ..config import DEFAULT_CONFIG, EngineConfig
+from ..session import local_frame
 from .dedup import _shingle_arrays
 from .sampling import SPLIT_BUCKETS, TRAIN_UPTO, VAL_UPTO, split_hash
 
@@ -1180,8 +1181,8 @@ def curation_funnel(
     tot = buckets.agg(
         F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("_total")
     )
-    stages = spark.createDataFrame(
-        list(enumerate(FUNNEL_STAGES)), "stage_idx int, stage string"
+    stages = local_frame(
+        spark, list(enumerate(FUNNEL_STAGES)), "stage_idx int, stage string"
     )
     j = (
         stages.join(buckets, "stage_idx", "left")

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from ..cache import corpus_id, memo
 from ..catalog import load_table, scan_spread
 from ..config import DEFAULT_CONFIG, EngineConfig
+from ..session import local_frame
 
 NGRAM_N = 3
 JACCARD_THRESHOLD = 0.8
@@ -1446,8 +1447,8 @@ def jaccard_threshold_sweep(
     """
     docs = load_table(spark, sf_dir, "documents")
     pairs = _jaccard_projection(_ngram_inter(spark, sf_dir, NGRAM_DF_CAP))
-    grid = spark.createDataFrame(
-        [(i,) for i in SWEEP_GRID_HUNDREDTHS], "grid_i int"
+    grid = local_frame(
+        spark, [(i,) for i in SWEEP_GRID_HUNDREDTHS], "grid_i int"
     ).select(
         "grid_i",
         F.expr("CAST(grid_i AS DOUBLE) / 100.0e0").alias("threshold"),

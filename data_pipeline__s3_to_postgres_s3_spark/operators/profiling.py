@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..catalog import TABLES, load_events, load_table, scan_spread
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.numeric import cents, portable_round
+from ..session import local_frame
 
 # Pinned column list (shared with the oracle builder) — profiling output
 # must be stable even if the physical parquet gains columns.
@@ -170,8 +171,8 @@ def referential_integrity_report(
         .cast("long")
         .alias("orphan_rows"),
     )
-    spine = spark.createDataFrame(
-        [(label,) for label, *_ in FK_RELATIONSHIPS], "relationship string"
+    spine = local_frame(
+        spark, [(label,) for label, *_ in FK_RELATIONSHIPS], "relationship string"
     )
     out = spine.join(stats, ["relationship"], "left")
     return out.select(
@@ -561,7 +562,8 @@ def table_column_stats(
         F.min("v").cast("double").alias("mn"),
         F.max("v").cast("double").alias("mx"),
     )
-    spine = spark.createDataFrame(
+    spine = local_frame(
+        spark,
         [(t, c) for t, cols in TABLE_STATS_SPECS for c in cols],
         "table_name string, column_name string",
     )

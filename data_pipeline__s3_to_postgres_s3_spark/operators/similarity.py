@@ -21,6 +21,7 @@ ordering ties break identically in Spark and the DuckDB oracle.
 from __future__ import annotations
 
 import hashlib
+import math
 import os
 import re
 import shutil
@@ -33,6 +34,7 @@ from ..cache import corpus_id, memo
 from ..catalog import load_table
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.numeric import portable_round
+from ..session import local_frame
 
 # Index metadata — PQ codebooks, IVF centroids, the corpus dimension,
 # the append watermarks — are DETERMINISTIC functions of the embeddings
@@ -457,12 +459,28 @@ def ivf_centroids(emb: DataFrame) -> DataFrame:
     )
 
 
+def _sql_double(v) -> str:
+    """A centroid element as an exact Spark SQL literal. repr() is the
+    shortest string that round-trips the IEEE double (-0.0, subnormals
+    and DBL_MAX included) and the D suffix types it DOUBLE; NULL and the
+    non-finite values, which the D grammar cannot spell, go through a
+    string cast."""
+    if v is None:
+        return "NULL"
+    v = float(v)
+    if math.isfinite(v):
+        return repr(v) + "D"
+    return f"CAST('{v}' AS DOUBLE)"
+
+
 def _inline_centroids(cent_rows: list, cell_type: str) -> F.Column:
     """A collected centroid index as a LITERAL array<struct<cell, centroid>>
     column (nlist × d doubles — index metadata). Inlining it makes every
     per-vector centroid computation a row-local array expression: no
     crossJoin against a centroid frame, no groupBy to pick a winner, no
-    join back to the corpus."""
+    join back to the corpus. The literal is ONE parsed SQL expression
+    (~1 ms); a per-element F.lit tree costs ~700 py4j calls (~0.3 s) per
+    10×64 index."""
     if not cent_rows:
         # 0-row / all-invalid corpus (r12 empty-table probe): a bare
         # F.array() literal is VOID-typed and fails ANALYSIS on the
@@ -473,15 +491,12 @@ def _inline_centroids(cent_rows: list, cell_type: str) -> F.Column:
             f"CAST(array() AS array<struct<cell:{cell_type},"
             "centroid:array<double>>>)"
         )
-    return F.array(
-        *[
-            F.struct(
-                F.lit(r["cell"]).cast(cell_type).alias("cell"),
-                F.array(*[F.lit(c) for c in r["centroid"]]).alias("centroid"),
-            )
-            for r in sorted(cent_rows, key=lambda r: r["cell"])
-        ]
+    structs = ", ".join(
+        f"named_struct('cell', CAST({r['cell']} AS {cell_type}), 'centroid', "
+        f"array({', '.join(map(_sql_double, r['centroid']))}))"
+        for r in sorted(cent_rows, key=lambda r: r["cell"])
     )
+    return F.expr(f"array({structs})")
 
 
 def _dist_structs(cents: F.Column, vec: str = "embedding") -> F.Column:
@@ -588,9 +603,7 @@ def embedding_neardup_pairs(
     dim = _corpus_dim(spark, sf_dir)
     n_tables = _fitting_tables(dim, NEARDUP_TABLES, NEARDUP_BITS)
     if n_tables == 0:
-        return spark.createDataFrame(
-            [], "vec_a bigint, vec_b bigint, sim double"
-        )
+        return local_frame(spark, [], "vec_a bigint, vec_b bigint, sim double")
     entries = F.array(
         *[
             F.struct(
@@ -708,9 +721,8 @@ def embedding_kmeans(
         F.col("vec_id").alias("cell"),
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("centroid"),
     )
-    cents = spark.createDataFrame(
-        [(r["cell"], r["centroid"]) for r in seeds.collect()],
-        "cell bigint, centroid array<double>",
+    cents = local_frame(
+        spark, seeds.collect(), "cell bigint, centroid array<double>"
     )
     for _ in range(KMEANS_ITERS):
         flat = _kmeans_assign(emb, cents).select(
@@ -725,10 +737,7 @@ def embedding_kmeans(
             .select("cell", F.expr("transform(sc, x -> x.c)").alias("centroid"))
             .collect()
         )
-        cents = spark.createDataFrame(
-            [(r["cell"], r["centroid"]) for r in rows],
-            "cell bigint, centroid array<double>",
-        )
+        cents = local_frame(spark, rows, "cell bigint, centroid array<double>")
     return _kmeans_assign(emb, cents).select(
         "vec_id", F.col("cell").alias("cluster"), "d2"
     )
@@ -1511,7 +1520,7 @@ def _pq_train_rows(spark: SparkSession, subs: DataFrame) -> list[tuple]:
     )
     out = [(r["m"], r["cell"], r["centroid"]) for r in seeds.collect()]
     for _ in range(PQ_ITERS):
-        cents = spark.createDataFrame(out, _PQ_CENTS_SCHEMA)
+        cents = local_frame(spark, out, _PQ_CENTS_SCHEMA)
         flat = _pq_assign(subs, cents).select(
             "m", "cell", F.posexplode("sv").alias("dim", "val")
         )
@@ -1545,7 +1554,7 @@ def _pq_codebook(
     rows = memo(
         kind, corpus_id(sf_dir, _EMB), (), lambda: _pq_train_rows(spark, subs)
     )
-    return spark.createDataFrame(rows, _PQ_CENTS_SCHEMA)
+    return local_frame(spark, rows, _PQ_CENTS_SCHEMA)
 
 
 def similarity_pq_topk(
@@ -2132,7 +2141,11 @@ _ANN_LEGACY_DIR_RE = re.compile(r"^[0-9a-f]{32}_\d+$")
 # rev 7: the trainer memos read through cache.memo over the embeddings
 # corpus_id instead of the module's own mtime-keyed dict — content-
 # identical, bumped per the mechanical discipline.
-_ANN_TRAINER_REV = 7
+# rev 8: trainer frames are Arrow-backed LocalRelations (session.
+# local_frame) instead of PythonRDD-backed createDataFrame lists, and
+# _inline_centroids emits one parsed SQL literal (_sql_double joins the
+# surface) — content-identical, bumped per the mechanical discipline.
+_ANN_TRAINER_REV = 8
 
 # Every function whose LOGIC determines persisted-artifact CONTENT or
 # layout (training, encoding, the base/delta split, the directory
@@ -2141,6 +2154,7 @@ _ANN_TRAINER_REV = 7
 _ANN_TRAINER_SURFACE = (
     "_embeddings",
     "ivf_centroids",
+    "_sql_double",
     "_inline_centroids",
     "_dist_structs",
     "_pq_subspaces",
@@ -2230,10 +2244,7 @@ def _ann_build_frames(
     subs = _ann_cell_subspaces(emb, cent_rows, sub)
     cents = _pq_codebook(spark, sf_dir, subs, kind=f"pq_codebook{suffix}")
     codes = _ann_encode_codes(subs, cents)
-    ivfcent = spark.createDataFrame(
-        [(r["cell"], r["centroid"]) for r in cent_rows],
-        "cell int, centroid array<double>",
-    )
+    ivfcent = local_frame(spark, cent_rows, _ANN_IVFC_SCHEMA)
     return {"pq_codebook": cents, "ivf_centroids": ivfcent, "codes": codes}
 
 
@@ -2500,7 +2511,7 @@ def _ensure_ann_delta(
         if encoded is not None:
             seg = encoded.where(_rng(lo, hi))
         else:  # degenerate base (no trained cells): nothing can encode
-            seg = spark.createDataFrame([], _ANN_CODES_SCHEMA)
+            seg = local_frame(spark, [], _ANN_CODES_SCHEMA)
         tmp = f"{seg_dir}.tmp-{os.getpid()}"
         shutil.rmtree(tmp, True)
         (

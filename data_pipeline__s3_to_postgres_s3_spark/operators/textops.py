@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, scan_spread
 from ..config import DEFAULT_CONFIG, EngineConfig
+from ..session import local_frame
 
 # Shared with oracles/llmops.py — keep in lockstep.
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "for")
@@ -350,7 +351,8 @@ def bm25_topk(
     )
     micro = F.floor(idf * tf_part * 1e6 + F.lit(0.5)).cast("long")
 
-    qmap = spark.createDataFrame(
+    qmap = local_frame(
+        spark,
         [(qid, t) for qid, ts in BM25_QUERIES.items() for t in ts],
         "query_id int, term string",
     )

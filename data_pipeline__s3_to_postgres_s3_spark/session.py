@@ -11,7 +11,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .config import default_cpus
 
@@ -54,3 +57,21 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A small driver-side row list (tuples in DDL column order) as a
+    DataFrame typed by ``ddl``. The rows travel as one Arrow table, which
+    plans as a ``LocalRelation`` with real size stats and keeps Python out
+    of the lineage: a plain list-backed ``createDataFrame`` reads through a
+    ``PythonRDD``, so every job over it forks/feeds Python workers. The
+    Arrow-table path does not consult the Arrow conf, so this also holds
+    in a caller-built session."""
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

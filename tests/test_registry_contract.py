@@ -285,3 +285,26 @@ def test_process_memos_live_only_in_cache_module():
             ):
                 offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not offenders, f"module-level memo outside cache.py: {offenders}"
+
+
+def test_local_frames_go_through_session_helper():
+    """Driver-side row lists become DataFrames only through
+    session.local_frame: a list-backed createDataFrame reads through a
+    PythonRDD, so every job over it starts Python workers (the first one
+    in a process forks the worker daemon, ~1.5 s). The helper's Arrow
+    table plans as a LocalRelation instead."""
+    import ast
+
+    pkg = REPO / "data_pipeline__s3_to_postgres_s3_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not offenders, f"createDataFrame outside session.py: {offenders}"

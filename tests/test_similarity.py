@@ -1168,6 +1168,10 @@ def test_trainer_source_change_requires_rev_bump():
         # rev 7: trainer memos read through cache.memo over the
         # embeddings corpus_id (content-identical).
         7: "34d4cf8b0e5a8aecbad2e197f48890d0",
+        # rev 8: Arrow-backed local_frame trainer frames and the
+        # one-parse centroid literal; _sql_double joins the surface
+        # (content-identical).
+        8: "85c6663ffab6c6929ddc730fc8464bad",
     }
     assert sim._ANN_TRAINER_REV in PINNED and (
         PINNED[sim._ANN_TRAINER_REV] == digest
@@ -1584,3 +1588,46 @@ def test_ann_compact_if_drifted_keeps_undrifted_stack(
         assert report["ok"], report
     finally:
         con.close()
+
+
+@pytest.mark.parametrize("cell_type", ["int", "bigint"])
+def test_inline_centroids_literal_matches_lit_tree(spark, cell_type):
+    """The one-parse SQL literal is value- AND type-equal to the F.lit
+    tree it replaced: repr()+"D" round-trips every double exactly (signed
+    zero, subnormal, DBL_MAX), NULL and non-finite elements survive, cells
+    sort and cast the same way, and nullability flags agree."""
+    import math
+
+    from pyspark.sql import Row
+    from pyspark.sql import functions as F
+
+    def lit_tree(cent_rows, cell_type):
+        return F.array(
+            *[
+                F.struct(
+                    F.lit(r["cell"]).cast(cell_type).alias("cell"),
+                    F.array(*[F.lit(c) for c in r["centroid"]]).alias("centroid"),
+                )
+                for r in sorted(cent_rows, key=lambda r: r["cell"])
+            ]
+        )
+
+    edge = [-0.0, 1e-06, 5e-324, 1.7976931348623157e308, -2.5e-310]
+    rows = [
+        Row(cell=3, centroid=edge),
+        Row(cell=-1, centroid=[None, math.nan, math.inf, -math.inf, 0.1]),
+        Row(cell=0, centroid=[0.1 * i - 0.2 for i in range(5)]),
+    ]
+    old = spark.range(1).select(lit_tree(rows, cell_type).alias("x"))
+    new = spark.range(1).select(sim._inline_centroids(rows, cell_type).alias("x"))
+    assert new.schema == old.schema
+
+    def bits(df):
+        # repr() tells -0.0 from 0.0 and compares NaN equal to itself.
+        return [
+            (s["cell"], [repr(v) for v in s["centroid"]])
+            for s in df.collect()[0]["x"]
+        ]
+
+    assert bits(new) == bits(old)
+    assert bits(new)[-1] == (3, [repr(v) for v in edge])
