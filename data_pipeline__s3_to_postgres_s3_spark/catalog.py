@@ -181,10 +181,6 @@ def _normalize_decimals(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 # events.ts representability window (r13 extreme-timestamp probe).
 # Half-open [MIN, MAX): pre-epoch values serve no analytics here and
 # far-future ones explode span-derived grids (gapfill) and ANSI month

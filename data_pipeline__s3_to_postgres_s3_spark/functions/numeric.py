@@ -44,8 +44,3 @@ def cents(col: Column, decimals: int = 2) -> Column:
 def portable_round_sql(expr: str, scale: int = 2) -> str:
     factor = 10**scale
     return f"FLOOR(({expr}) * {factor} + 0.5) / {factor}"
-
-
-def cents_sql(expr: str, decimals: int = 2) -> str:
-    factor = 10**decimals
-    return f"CAST(ROUND(({expr}) * {factor}, 0) AS BIGINT)"

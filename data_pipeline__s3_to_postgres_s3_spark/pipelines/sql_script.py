@@ -487,22 +487,6 @@ class SqlScriptRunner:
         df.createOrReplaceTempView(self._view(target))
 
 
-def run_sql_file(
-    spark: SparkSession,
-    path: str,
-    frames: dict[str, DataFrame],
-    run_date: dt.date | None = None,
-) -> ScriptResult:
-    """Convenience wrapper: register `frames` (keys are ``schema.table``),
-    read `path`, run it — the reference's perform_transformation task shape
-    (extract_load_transform_data_pipeline.py.py:122-134)."""
-    runner = SqlScriptRunner(spark, run_date=run_date)
-    for qualified, df in frames.items():
-        runner.register(qualified, df)
-    with open(path, encoding="utf-8") as fh:
-        return runner.run_script(fh.read())
-
-
 # ---------------------------------------------------------------------------
 # Driver-gated script-path queries (S5 twins of the DataFrame transforms)
 # ---------------------------------------------------------------------------

@@ -108,19 +108,6 @@ def quarantine(bad: DataFrame, reject_path: str) -> None:
     bad.write.mode("append").parquet(reject_path)
 
 
-def write_partitioned(
-    df: DataFrame, path: str, ingestion_date: str, mode: str = "overwrite"
-) -> None:
-    """Overwrite-by-date parquet sink (idempotent re-runs of one date)."""
-    out = df.withColumn("ingestion_date", F.lit(ingestion_date).cast("date"))
-    (
-        out.write.mode(mode)
-        .partitionBy("ingestion_date")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
-
-
 def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
     """CSV export (reference S6: analytics_export/<t>.csv). single_file
     coalesces to 1 for byte-level parity with the reference's one-file

@@ -15,7 +15,6 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from data_pipeline__s3_to_postgres_s3_spark.session import get_spark
 
     s = get_spark(app_name="tests", shuffle_partitions=8)

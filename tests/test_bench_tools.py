@@ -1,7 +1,8 @@
-"""Pins for the bench tooling (tools/bench_delta.py) — the r9
-targeted-min-of-2 contract: a flagged REGRESSION whose min-of-2 clears
-the guard auto-closes as noise; one that doesn't stays red. No Spark —
-pure subprocess over synthetic bench JSONs."""
+"""Pins for the bench tooling: tools/bench_delta.py's r9 targeted-min-
+of-2 contract (a flagged REGRESSION whose min-of-2 clears the guard
+auto-closes as noise; one that doesn't stays red — pure subprocess over
+synthetic bench JSONs), and tools/verify_window.py --mutate run from
+outside the repo."""
 
 from __future__ import annotations
 
@@ -61,3 +62,26 @@ def test_without_second_sample_regression_still_fires(tmp_path):
     r = _run(tmp_path, old, new)
     assert r.returncode == 1
     assert "REGRESSION" in r.stdout
+
+
+def test_verify_window_mutate_runs_from_any_cwd(tmp_path, sf_small):
+    """The applyInPandasWithState stream imports the package inside the
+    Python worker, so the tool must hand the repo root to the workers,
+    not only to its own sys.path."""
+    r = subprocess.run(
+        [
+            sys.executable,
+            str(REPO / "tools" / "verify_window.py"),
+            sf_small,
+            "--mutate",
+            "extreme_values",
+            "stream_user_running_max",
+            "event_type_hourly",
+        ],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
+    assert "red: []" in r.stdout

@@ -4,8 +4,9 @@ regenerated table arrives with ZERO rows (schema intact) or, for
 embeddings, with every row invalid (NULL/empty/interior-NULL/NaN — no
 valid max-dim row for the chokepoint to anchor on).
 
-The full-registry probe (tools/probe_empty_tables.py — 11 variants ×
-188 queries) found 22 reds in five classes, all fixed at chokepoints:
+The full-registry probe (the `empty_<table>` and
+`empty_embeddings_invalid` corpora in tests/mutations.py — 11 variants
+× 188 queries) found 22 reds in five classes, all fixed at chokepoints:
 
 - driver-side scalars collected from the corpus go None: BM25's avgdl,
   the three incremental-dedup max-id watermarks, the Z-curve min/max
@@ -32,15 +33,11 @@ regression insurance.
 
 from __future__ import annotations
 
-import shutil
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-from data_pipeline__s3_to_postgres_s3_spark.catalog import TABLES
 from data_pipeline__s3_to_postgres_s3_spark.registry import ORACLES, QUERIES
 
+from .mutations import build
 from .oracle_harness import compare, duckdb_connection
 
 REPS = {
@@ -138,49 +135,16 @@ CASES_RUN = subset(
 )
 
 
-def _build_variant(sf_small: str, d: str, variant: str) -> None:
-    table = variant.removesuffix("_invalid")
-    for t in TABLES:
-        if t != table:
-            shutil.copy(f"{sf_small}/{t}.parquet", f"{d}/{t}.parquet")
-    src = pq.read_table(f"{sf_small}/{table}.parquet")
-    if variant.endswith("_invalid"):
-        emb, vids, labels = [], [], []
-        for i, r in enumerate(src.to_pylist()[:40]):
-            vids.append(r["vec_id"])
-            labels.append(r["label"])
-            if i % 4 == 0:
-                emb.append(None)
-            elif i % 4 == 1:
-                emb.append([])
-            elif i % 4 == 2:
-                v = list(r["embedding"])
-                v[0] = None
-                emb.append(v)
-            else:
-                v = list(r["embedding"])
-                v[1] = float("nan")
-                emb.append(v)
-        out = pa.table(
-            {
-                "vec_id": pa.array(vids, pa.int64()),
-                "embedding": pa.array(emb, pa.list_(pa.float32())),
-                "label": pa.array(labels, pa.int32()),
-            }
-        )
-    else:
-        out = src.schema.empty_table()
-    pq.write_table(out, f"{d}/{table}.parquet")
-
-
 @pytest.fixture(scope="module")
 def empty_variant_dirs(sf_small, tmp_path_factory):
-    dirs = {}
-    for variant in REPS:
-        d = tmp_path_factory.mktemp(f"empty_{variant}")
-        _build_variant(sf_small, str(d), variant)
-        dirs[variant] = str(d)
-    return dirs
+    return {
+        variant: build(
+            f"empty_{variant}",
+            sf_small,
+            str(tmp_path_factory.mktemp(f"empty_{variant}")),
+        )
+        for variant in REPS
+    }
 
 
 @pytest.mark.parametrize("variant,name", CASES_RUN)

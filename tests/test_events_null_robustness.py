@@ -1,7 +1,8 @@
 """Events-side NULL axis of the driver robustness matrix (round 6): the
 differential gate must stay green when regenerated events carry NULL
-ts / user_id / event_type / value rows. The probe that built this test
-caught SEVEN real hazards:
+ts / user_id / event_type / value rows (the `null_events` corpus in
+tests/mutations.py). The probe that built this test caught SEVEN real
+hazards:
 
 - Spark windows default NULLS FIRST where DuckDB defaults NULLS LAST —
   every oracle window ordering by event time now pins NULLS FIRST
@@ -39,16 +40,11 @@ NULLS FIRST (Spark's ASC default; DuckDB defaults NULLS LAST).
 
 from __future__ import annotations
 
-import datetime as dt
-import shutil
-
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-from data_pipeline__s3_to_postgres_s3_spark.catalog import TABLES
 from data_pipeline__s3_to_postgres_s3_spark.registry import ORACLES, QUERIES
 
+from .mutations import build
 from .oracle_harness import compare, duckdb_connection
 from .matrix_budget import subset  # noqa: E402
 
@@ -100,40 +96,9 @@ QUERIES_UNDER_TEST = [
 
 @pytest.fixture(scope="module")
 def nullish_events_dir(sf_small, tmp_path_factory):
-    d = tmp_path_factory.mktemp("null_events")
-    for t in TABLES:
-        if t != "events":
-            shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    base = dt.datetime(2024, 1, 1)
-    rows = []
-    for i in range(60):
-        rows.append(
-            (
-                None if i % 19 == 4 else i,
-                None if i % 13 == 5 else base + dt.timedelta(minutes=7 * i),
-                None if i % 11 == 3 else 100 + i % 4,
-                None
-                if i % 17 == 7
-                else ["view", "purchase", "click", "signup"][i % 4],
-                None if i % 7 == 2 else float(i),
-                '{"k": %d}' % (i % 9),
-            )
-        )
-    cols = list(zip(*rows))
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array(cols[0], pa.int64()),
-                "ts": pa.array(cols[1], pa.timestamp("us")),
-                "user_id": pa.array(cols[2], pa.int64()),
-                "event_type": pa.array(cols[3], pa.string()),
-                "value": pa.array(cols[4], pa.float64()),
-                "props": pa.array(cols[5], pa.string()),
-            }
-        ),
-        str(d / "events.parquet"),
+    return build(
+        "null_events", sf_small, str(tmp_path_factory.mktemp("null_events"))
     )
-    return str(d)
 
 
 @pytest.mark.parametrize("name", subset(QUERIES_UNDER_TEST, keep=('stream_dedup_events', 'stream_view_purchase_join', 'top_session_paths', 'stream_distinct_users'), k=3))

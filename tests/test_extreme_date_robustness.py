@@ -1,5 +1,5 @@
-"""Extreme RELATIONAL dates axis (r13 second probe,
-tools/probe_extreme_dates.py): pre-epoch (1901/1969) and far-future
+"""Extreme RELATIONAL dates axis (r13 second probe, the `extreme_dates`
+corpus in tests/mutations.py): pre-epoch (1901/1969) and far-future
 (2260/9999) values planted into orders.o_orderdate and
 lineitem.l_shipdate on strides, replayed over all 52 orders/lineitem-
 reading oracles — ZERO reds. Why the surface holds without a gate (vs
@@ -15,24 +15,13 @@ span-derived sequence over order dates, it reds here first.
 
 from __future__ import annotations
 
-import datetime as dt
-import shutil
-
-import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from data_pipeline__s3_to_postgres_s3_spark.catalog import TABLES
 from data_pipeline__s3_to_postgres_s3_spark.registry import ORACLES, QUERIES
 
+from .mutations import build
 from .oracle_harness import compare, duckdb_connection
-
-SPECIALS = [
-    dt.datetime(1901, 6, 15),
-    dt.datetime(1969, 12, 31, 23, 50),
-    dt.datetime(9999, 6, 1),
-    dt.datetime(2260, 1, 2),
-]
 
 # Date-arithmetic-heavy representatives of every family the probe
 # cleared (the full 52 ran in the probe; these pin it in the suite).
@@ -56,29 +45,9 @@ QUERIES_UNDER_TEST = [
 
 @pytest.fixture(scope="module")
 def extreme_date_dir(sf_small, tmp_path_factory):
-    d = tmp_path_factory.mktemp("extreme_dates")
-    for t in TABLES:
-        if t in ("orders", "lineitem"):
-            continue
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-
-    def plant(table: pa.Table, col: str, stride: int) -> pa.Table:
-        vals = table.column(col).to_pylist()
-        for i in range(len(vals)):
-            if vals[i] is not None and i % stride == 3:
-                vals[i] = SPECIALS[(i // stride) % len(SPECIALS)]
-        idx = table.schema.get_field_index(col)
-        return table.set_column(
-            idx,
-            table.schema.field(idx),
-            pa.array(vals, table.schema.field(idx).type),
-        )
-
-    o = pq.read_table(f"{sf_small}/orders.parquet")
-    pq.write_table(plant(o, "o_orderdate", 17), str(d / "orders.parquet"))
-    li = pq.read_table(f"{sf_small}/lineitem.parquet")
-    pq.write_table(plant(li, "l_shipdate", 23), str(d / "lineitem.parquet"))
-    return str(d)
+    return build(
+        "extreme_dates", sf_small, str(tmp_path_factory.mktemp("extreme_dates"))
+    )
 
 
 def test_fixture_fires_the_extremes(extreme_date_dir):

@@ -1,6 +1,6 @@
-"""Non-finite / extreme RELATIONAL measures axis (r13 fourth probe,
-tools/probe_extreme_money.py): NaN / ±Inf / ±1e300 / 1e-300 planted into
-lineitem.l_quantity/l_extendedprice/l_discount/l_tax,
+"""Non-finite / extreme RELATIONAL measures axis (r13 fourth probe, the
+`extreme_money` corpus in tests/mutations.py): NaN / ±Inf / ±1e300 /
+1e-300 planted into lineitem.l_quantity/l_extendedprice/l_discount/l_tax,
 orders.o_totalprice, part.p_retailprice, customer.c_acctbal,
 supplier.s_acctbal — 27 of 55 relational oracles red before the fix,
 dominated by the ANSI cents CAST_OVERFLOW abort (identical on both
@@ -20,28 +20,14 @@ load_table(raw=True) and its oracle is in _RAW_FEED_ORACLES.
 
 from __future__ import annotations
 
-import shutil
-
-import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from data_pipeline__s3_to_postgres_s3_spark.catalog import TABLES
 from data_pipeline__s3_to_postgres_s3_spark.registry import ORACLES, QUERIES
 
+from .mutations import MONEY_PLANT, build
 from .oracle_harness import compare, duckdb_connection
 from .matrix_budget import subset  # noqa: E402
-
-SPECIALS = [float("nan"), float("inf"), float("-inf"), 1e300, -1e300, 1e-300]
-
-PLANT = {
-    "lineitem": [("l_extendedprice", 13), ("l_discount", 17),
-                 ("l_tax", 19), ("l_quantity", 23)],
-    "orders": [("o_totalprice", 11)],
-    "part": [("p_retailprice", 7)],
-    "customer": [("c_acctbal", 9)],
-    "supplier": [("s_acctbal", 5)],
-}
 
 # The heaviest hit classes from the probe's 27 reds + family reps.
 QUERIES_UNDER_TEST = [
@@ -85,36 +71,18 @@ QUERIES_UNDER_TEST = [
 ]
 
 
-def _plant(table: pa.Table, col: str, stride: int) -> pa.Table:
-    vals = table.column(col).to_pylist()
-    for i in range(len(vals)):
-        if vals[i] is not None and i % stride == 3:
-            vals[i] = SPECIALS[(i // stride) % len(SPECIALS)]
-    idx = table.schema.get_field_index(col)
-    return table.set_column(
-        idx, table.schema.field(idx), pa.array(vals, pa.float64())
-    )
-
-
 @pytest.fixture(scope="module")
 def extreme_money_dir(sf_small, tmp_path_factory):
-    d = tmp_path_factory.mktemp("extreme_money")
-    for t in TABLES:
-        if t in PLANT:
-            tab = pq.read_table(f"{sf_small}/{t}.parquet")
-            for col, stride in PLANT[t]:
-                tab = _plant(tab, col, stride)
-            pq.write_table(tab, str(d / f"{t}.parquet"))
-        else:
-            shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    return str(d)
+    return build(
+        "extreme_money", sf_small, str(tmp_path_factory.mktemp("extreme_money"))
+    )
 
 
 def test_fixture_fires_every_special(extreme_money_dir):
     import math
 
     found = set()
-    for t, cols in PLANT.items():
+    for t, cols in MONEY_PLANT.items():
         tab = pq.read_table(f"{extreme_money_dir}/{t}.parquet")
         for col, _ in cols:
             for v in tab.column(col).to_pylist():
@@ -174,7 +142,7 @@ def test_census_reads_raw_measures(spark, extreme_money_dir):
             spark, extreme_money_dir
         ).collect()
     }
-    for t in PLANT:
+    for t in MONEY_PLANT:
         assert rows[t] == pq.read_table(
             f"{extreme_money_dir}/{t}.parquet"
         ).num_rows

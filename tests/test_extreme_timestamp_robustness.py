@@ -3,8 +3,8 @@ ask #5): the differential gate must stay green when a corrupted feed
 carries pre-epoch ts, far-future ts (year 9999), sub-second ties, and
 MANY events at the IDENTICAL (user, ts).
 
-The probe (tools/probe_extreme_timestamps.py, 38 events-reading oracles)
-found two real classes before the fix:
+The probe (the `extreme_timestamps` corpus in tests/mutations.py, 38
+events-reading oracles) found two real classes before the fix:
 
 - a single year-9999 timestamp OOM-killed the JVM outright: the
   events_gapfill_locf min-to-max hourly grid spans 8000 years — the
@@ -31,16 +31,12 @@ NULL-event_id axis) — this matrix keeps that true.
 
 from __future__ import annotations
 
-import datetime as dt
-import shutil
-
-import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from data_pipeline__s3_to_postgres_s3_spark.catalog import TABLES
 from data_pipeline__s3_to_postgres_s3_spark.registry import ORACLES, QUERIES
 
+from .mutations import build
 from .oracle_harness import compare, duckdb_connection
 from .matrix_budget import subset  # noqa: E402
 
@@ -91,61 +87,11 @@ QUERIES_UNDER_TEST = [
     "stream_heavy_hitters",
 ]
 
-TYPES = ["view", "purchase", "click", "signup", "error"]
-BASE = dt.datetime(2024, 1, 1)
-
-
-def _build_events(path: str) -> None:
-    """The probe corpus, verbatim (tools/probe_extreme_timestamps.py)."""
-    rows = []
-    eid = 0
-
-    def add(ts, user, etype, value, props='{"k": 1}'):
-        nonlocal eid
-        rows.append((eid, ts, user, etype, float(value), props))
-        eid += 1
-
-    for i in range(120):
-        ts = BASE + dt.timedelta(minutes=11 * i)
-        if i % 11 == 3:
-            ts = dt.datetime(1969, 12, 31, 23, 50) if i % 2 else dt.datetime(
-                1901, 6, 15, 12, 0
-            )
-        elif i % 13 == 5:
-            ts = dt.datetime(9999, 6, 1, 0, 0) if i % 2 else dt.datetime(
-                2260, 1, 2, 3, 4
-            )
-        elif i % 7 == 2:
-            ts = BASE + dt.timedelta(minutes=11 * i, microseconds=i % 3)
-        add(ts, 100 + i % 5, TYPES[i % 5], i)
-    for k in range(4):
-        ts = BASE + dt.timedelta(hours=3 * k, minutes=17)
-        for j in range(6):
-            add(ts, 200 + k, TYPES[j % 5], 1000 + j)
-    cols = list(zip(*rows))
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array(cols[0], pa.int64()),
-                "ts": pa.array(cols[1], pa.timestamp("us")),
-                "user_id": pa.array(cols[2], pa.int64()),
-                "event_type": pa.array(cols[3], pa.string()),
-                "value": pa.array(cols[4], pa.float64()),
-                "props": pa.array(cols[5], pa.string()),
-            }
-        ),
-        path,
-    )
-
-
 @pytest.fixture(scope="module")
 def extreme_ts_dir(sf_small, tmp_path_factory):
-    d = tmp_path_factory.mktemp("extreme_ts")
-    for t in TABLES:
-        if t != "events":
-            shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    _build_events(str(d / "events.parquet"))
-    return str(d)
+    return build(
+        "extreme_timestamps", sf_small, str(tmp_path_factory.mktemp("extreme_ts"))
+    )
 
 
 def test_fixture_fires_every_hazard(extreme_ts_dir):

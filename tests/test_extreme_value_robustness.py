@@ -1,7 +1,7 @@
 """Non-finite / extreme events.value axis (r12): the differential gate
 must stay green when a corrupted feed carries NaN / ±Inf / ±1e300 /
-1e-300 values. The probe (tools/probe_extreme_values.py) found 17 of 34
-events-family queries red in two classes:
+1e-300 values. Replaying the `extreme_values` corpus (tests/mutations.py)
+found 17 of 34 events-family queries red in two classes:
 
 - the universal integer-money discipline (cents() = CAST(ROUND(v·100)
   AS BIGINT)) ABORTS under ANSI on NaN/Inf/1e300 — batch and streaming,
@@ -32,6 +32,7 @@ import pytest
 from data_pipeline__s3_to_postgres_s3_spark.catalog import TABLES
 from data_pipeline__s3_to_postgres_s3_spark.registry import ORACLES, QUERIES
 
+from .mutations import build
 from .oracle_harness import compare, duckdb_connection
 from .matrix_budget import subset  # noqa: E402
 
@@ -78,49 +79,9 @@ QUERIES_UNDER_TEST = [
 
 @pytest.fixture(scope="module")
 def extreme_events_dir(sf_small, tmp_path_factory):
-    d = tmp_path_factory.mktemp("extreme_events")
-    for t in TABLES:
-        if t != "events":
-            shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    base = dt.datetime(2024, 1, 1)
-    specials = [
-        float("nan"),
-        float("inf"),
-        float("-inf"),
-        1e300,
-        -1e300,
-        1e-300,
-    ]
-    rows = []
-    for i in range(80):
-        v = float(i)
-        if i % 9 == 4:
-            v = specials[(i // 9) % len(specials)]
-        rows.append(
-            (
-                i,
-                base + dt.timedelta(minutes=7 * i),
-                100 + i % 4,
-                ["view", "purchase", "click", "signup"][i % 4],
-                v,
-                '{"k": %d}' % (i % 9),
-            )
-        )
-    cols = list(zip(*rows))
-    pq.write_table(
-        pa.table(
-            {
-                "event_id": pa.array(cols[0], pa.int64()),
-                "ts": pa.array(cols[1], pa.timestamp("us")),
-                "user_id": pa.array(cols[2], pa.int64()),
-                "event_type": pa.array(cols[3], pa.string()),
-                "value": pa.array(cols[4], pa.float64()),
-                "props": pa.array(cols[5], pa.string()),
-            }
-        ),
-        str(d / "events.parquet"),
+    return build(
+        "extreme_values", sf_small, str(tmp_path_factory.mktemp("extreme_events"))
     )
-    return str(d)
 
 
 @pytest.mark.parametrize("name", subset(QUERIES_UNDER_TEST, keep=('stream_dedup_events', 'table_column_stats'), k=3))

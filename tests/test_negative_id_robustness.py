@@ -1,8 +1,8 @@
-"""Negative-id axis (r13 third probe, tools/probe_negative_ids.py): a
-feed that derives ids from a SIGNED hash ships negative doc_ids /
-vec_ids / event_ids / user_ids. The full probe (135 doc/emb/event-
-reading oracles) found 14 reds in three classes, all fixed at
-chokepoints:
+"""Negative-id axis (r13 third probe, the `negative_ids` corpus in
+tests/mutations.py): a feed that derives ids from a SIGNED hash ships
+negative doc_ids / vec_ids / event_ids / user_ids. The full probe (135
+doc/emb/event-reading oracles) found 14 reds in three classes, all
+fixed at chokepoints:
 
 - the split/sample hash: Spark's two's-complement bitwiseAND of a
   NEGATIVE salted residue disagreed with DuckDB's signed % — fixed by
@@ -27,15 +27,12 @@ chokepoints:
 
 from __future__ import annotations
 
-import shutil
-
-import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from data_pipeline__s3_to_postgres_s3_spark.catalog import TABLES
 from data_pipeline__s3_to_postgres_s3_spark.registry import ORACLES, QUERIES
 
+from .mutations import build
 from .oracle_harness import compare, duckdb_connection
 from .matrix_budget import subset  # noqa: E402
 
@@ -78,35 +75,11 @@ QUERIES_UNDER_TEST = [
 ]
 
 
-def _negate(table: pa.Table, col: str, stride: int) -> pa.Table:
-    vals = table.column(col).to_pylist()
-    for i in range(len(vals)):
-        if vals[i] is not None and i % stride == 3:
-            vals[i] = -vals[i] - 1  # -1 keeps 0 out of its own image
-    idx = table.schema.get_field_index(col)
-    return table.set_column(
-        idx,
-        table.schema.field(idx),
-        pa.array(vals, table.schema.field(idx).type),
-    )
-
-
 @pytest.fixture(scope="module")
 def negative_id_dir(sf_small, tmp_path_factory):
-    d = tmp_path_factory.mktemp("negative_ids")
-    for t in TABLES:
-        if t in ("documents", "embeddings", "events"):
-            continue
-        shutil.copy(f"{sf_small}/{t}.parquet", str(d / f"{t}.parquet"))
-    docs = pq.read_table(f"{sf_small}/documents.parquet")
-    pq.write_table(_negate(docs, "doc_id", 7), str(d / "documents.parquet"))
-    emb = pq.read_table(f"{sf_small}/embeddings.parquet")
-    pq.write_table(_negate(emb, "vec_id", 9), str(d / "embeddings.parquet"))
-    ev = pq.read_table(f"{sf_small}/events.parquet")
-    ev = _negate(ev, "event_id", 11)
-    ev = _negate(ev, "user_id", 13)
-    pq.write_table(ev, str(d / "events.parquet"))
-    return str(d)
+    return build(
+        "negative_ids", sf_small, str(tmp_path_factory.mktemp("negative_ids"))
+    )
 
 
 def test_fixture_fires_negative_ids(negative_id_dir):

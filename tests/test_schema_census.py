@@ -26,6 +26,7 @@ import pytest
 from data_pipeline__s3_to_postgres_s3_spark.catalog import TABLES
 from data_pipeline__s3_to_postgres_s3_spark.registry import ORACLES, QUERIES
 
+from .mutations import build
 from .oracle_harness import compare, duckdb_connection
 
 
@@ -33,24 +34,15 @@ from .oracle_harness import compare, duckdb_connection
 def drift_dirs(sf_small, tmp_path_factory):
     """Two drifted sf0.001 variants of the orders table: a never-
     referenced extra column spliced in at position 0, and the column
-    order reversed (the probe_schema_drift.py shapes)."""
-    out = {}
-    for kind in ("extra", "reordered"):
-        d = str(tmp_path_factory.mktemp(f"drift_{kind}"))
-        for t in TABLES:
-            if t != "orders":
-                shutil.copy(f"{sf_small}/{t}.parquet", f"{d}/{t}.parquet")
-        src = pq.read_table(f"{sf_small}/orders.parquet")
-        if kind == "extra":
-            col = pa.array(["drift"] * src.num_rows, pa.string())
-            drifted = src.add_column(
-                0, pa.field("_schema_drift_extra", pa.string()), col
-            )
-        else:
-            drifted = src.select(list(reversed(src.column_names)))
-        pq.write_table(drifted, f"{d}/orders.parquet")
-        out[kind] = d
-    return out
+    order reversed (the `drift_orders_*` corpora in tests/mutations.py)."""
+    return {
+        kind: build(
+            f"drift_orders_{kind}",
+            sf_small,
+            str(tmp_path_factory.mktemp(f"drift_{kind}")),
+        )
+        for kind in ("extra", "reordered")
+    }
 
 
 def _snapshot_rows(spark, sf_dir):

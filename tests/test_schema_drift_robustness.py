@@ -4,9 +4,9 @@ change the physical SCHEMA, not just value encodings — the r13
 partial-schema gotcha (narrow projections hitting UNRESOLVED_COLUMN at
 the dirtiness probes) was this class's tip.
 
-The full-registry probe (tools/probe_schema_drift.py — 22 variants ×
-195 queries at sf0.001: a never-referenced extra column spliced at
-position 0 per table, column order reversed per table, int64 columns
+The full-registry probe (the `drift_*` corpora in tests/mutations.py —
+22 variants × 195 queries at sf0.001: a never-referenced extra column
+spliced at position 0 per table, column order reversed per table, int64 columns
 narrowed to int32 where values fit, and every field marked
 non-nullable) is the sweep; this matrix pins one representative
 variant per drift kind × the heaviest consumers of the drifted table,
@@ -28,50 +28,15 @@ Why these shapes stay green by design:
 
 from __future__ import annotations
 
-import shutil
-
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
-from data_pipeline__s3_to_postgres_s3_spark.catalog import TABLES
 from data_pipeline__s3_to_postgres_s3_spark.registry import ORACLES, QUERIES
 
+from .mutations import build
 from .oracle_harness import compare, duckdb_connection
 from .matrix_budget import subset  # noqa: E402
-
-
-def _drift(src: pa.Table, kind: str) -> pa.Table:
-    if kind == "extra":
-        col = pa.array(["drift"] * src.num_rows, pa.string())
-        return src.add_column(
-            0, pa.field("_schema_drift_extra", pa.string()), col
-        )
-    if kind == "reordered":
-        return src.select(list(reversed(src.column_names)))
-    if kind == "narrow":
-        import pyarrow.compute as pc
-
-        cols, fields = [], []
-        for f in src.schema:
-            c = src.column(f.name)
-            if pa.types.is_int64(f.type):
-                mn, mx = pc.min(c).as_py(), pc.max(c).as_py()
-                if mn is not None and -(2**31) <= mn and mx < 2**31:
-                    c = c.cast(pa.int32())
-                    f = pa.field(f.name, pa.int32())
-            cols.append(c)
-            fields.append(f)
-        return pa.table(dict(zip([f.name for f in fields], cols)))
-    if kind == "required":
-        fields = [
-            pa.field(f.name, f.type, nullable=False)
-            if not src.column(f.name).null_count
-            else f
-            for f in src.schema
-        ]
-        return src.cast(pa.schema(fields))
-    raise ValueError(kind)
 
 
 # (variant-table, kind, queries) — the heaviest consumers of each
@@ -138,28 +103,13 @@ ALL_REQUIRED_REPS = [
 
 @pytest.fixture(scope="module")
 def drift_variant_dirs(sf_small, tmp_path_factory):
-    dirs = {}
-    for table, kind, _ in VARIANTS:
-        key = f"{table}_{kind}"
-        if key in dirs:
-            continue
-        d = str(tmp_path_factory.mktemp(f"sdrift_{key}"))
-        for t in TABLES:
-            if t != table:
-                shutil.copy(f"{sf_small}/{t}.parquet", f"{d}/{t}.parquet")
-        pq.write_table(
-            _drift(pq.read_table(f"{sf_small}/{table}.parquet"), kind),
-            f"{d}/{table}.parquet",
+    variants = {f"{table}_{kind}" for table, kind, _ in VARIANTS}
+    return {
+        v: build(
+            f"drift_{v}", sf_small, str(tmp_path_factory.mktemp(f"sdrift_{v}"))
         )
-        dirs[key] = d
-    d = str(tmp_path_factory.mktemp("sdrift_all_required"))
-    for t in TABLES:
-        pq.write_table(
-            _drift(pq.read_table(f"{sf_small}/{t}.parquet"), "required"),
-            f"{d}/{t}.parquet",
-        )
-    dirs["all_required"] = d
-    return dirs
+        for v in sorted(variants) + ["all_required"]
+    }
 
 
 CASES = [
