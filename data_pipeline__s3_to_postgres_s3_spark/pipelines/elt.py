@@ -14,6 +14,15 @@ the destination's state) and the final exports. No driver-side data
 movement at all — the reference's XCom hand-off (its scalability cliff) has
 no equivalent here.
 
+Within each of load, transform and export the three tables are independent,
+so ``_concurrently`` runs their per-table work on one thread each, under
+``inheritable_thread_target(spark)`` so every job keeps the caller's job
+group, local properties and tags. It waits for all three and then re-raises
+the first failure in table order. A failed table no longer stops its
+siblings: when ``load`` raises, ``reviews`` may already be appended, which is
+the same append-only duplication on retry (quirk Q7) that any failure after
+``load`` already causes.
+
 Offline-testable: sources/sinks are local paths by default; swap in
 s3a://… URLs (sources/s3.py) and JdbcTarget (sources/jdbc.py) for the real
 topology. The transform stage runs the same operators the driver contract
@@ -22,9 +31,14 @@ exposes, so correctness is covered by the sf0.01 oracle gate.
 
 from __future__ import annotations
 
+import operator
 import os
+from collections.abc import Callable, Collection
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,21 +76,34 @@ def extract(spark: SparkSession, paths: EltPaths) -> dict[str, DataFrame]:
         out[table] = clean
     return out
 
-def load(
-    spark: SparkSession, frames: dict[str, DataFrame], paths: EltPaths
-) -> None:
-    """S3/S4: incremental max-PK watermark append for keyed tables; plain
-    append for reviews (duplicates allowed — SURVEY.md Q7). State lives in
-    the destination, exactly like the reference (:95-101)."""
-    for table, df in frames.items():
-        dest = paths.staging(table)
-        pk = WATERMARK_PKS.get(table)
-        if pk is None:
-            df.write.mode("append").parquet(dest)
-            continue
+
+def _concurrently(spark: SparkSession, fn: Callable, items: Collection[tuple]) -> list:
+    """``[fn(*item) for item in items]``, each call on its own thread.
+
+    Waits for every call to finish, then re-raises the first failure in
+    ``items`` order; no error is swallowed."""
+    with ThreadPoolExecutor(max_workers=len(items)) as pool:
+        # Wrap per item: each wrapper holds its own copy of the caller's
+        # local properties, which SQL execution mutates on the thread.
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(fn), *item) for item in items
+        ]
+    return [f.result() for f in futures]
+
+
+def _staged(spark: SparkSession, paths: EltPaths, table: str) -> DataFrame:
+    """A staging table read with its declared schema: no inference job, and
+    a directory holding only a crashed first write's ``_temporary/`` reads
+    as empty instead of failing."""
+    return spark.read.schema(schemas.CSV_SCHEMAS[table]).parquet(paths.staging(table))
+
+
+def _append(spark: SparkSession, paths: EltPaths, table: str, df: DataFrame) -> None:
+    pk = WATERMARK_PKS.get(table)
+    if pk is not None:
         try:
             wm = (
-                spark.read.parquet(dest)
+                _staged(spark, paths, table)
                 .agg(F.coalesce(F.max(pk), F.lit(0)).alias("wm"))
                 .collect()[0]["wm"]
             )
@@ -90,7 +117,19 @@ def load(
             if "PATH_NOT_FOUND" not in condition and "PATH_NOT_FOUND" not in str(exc):
                 raise
             wm = 0
-        df.where(F.col(pk) > F.lit(wm)).write.mode("append").parquet(dest)
+        df = df.where(F.col(pk) > F.lit(wm))
+    df.write.mode("append").parquet(paths.staging(table))
+
+
+def load(
+    spark: SparkSession, frames: dict[str, DataFrame], paths: EltPaths
+) -> None:
+    """S3/S4: incremental max-PK watermark append for keyed tables; plain
+    append for reviews (duplicates allowed — SURVEY.md Q7). State lives in
+    the destination, exactly like the reference (:95-101)."""
+    _concurrently(
+        spark, _append, [(spark, paths, table, df) for table, df in frames.items()]
+    )
 
 
 def transform(
@@ -98,22 +137,24 @@ def transform(
 ) -> dict[str, DataFrame]:
     """S5/S9: the three analytics tables computed IN SPARK from staging —
     the reference shipped this SQL to Postgres; here Catalyst runs it."""
-    orders = spark.read.parquet(paths.staging("orders"))
-    ships = spark.read.parquet(paths.staging("shipment_deliveries"))
-    reviews = spark.read.parquet(paths.staging("reviews"))
-    return {
-        "agg_public_holiday": agg_public_holiday_from_tables(spark, orders, cfg),
-        "agg_shipments": agg_shipments_from_tables(ships, orders, cfg),
-        "best_performing_product": best_performing_product_from_tables(
-            spark, orders, ships, reviews, cfg
+    orders, ships, reviews = (_staged(spark, paths, t) for t in STAGING_TABLES)
+    builds = {
+        "agg_public_holiday": (agg_public_holiday_from_tables, spark, orders, cfg),
+        "agg_shipments": (agg_shipments_from_tables, ships, orders, cfg),
+        "best_performing_product": (
+            best_performing_product_from_tables, spark, orders, ships, reviews, cfg
         ),
     }
+    return dict(zip(builds, _concurrently(spark, operator.call, builds.values())))
 
 
 def export(results: dict[str, DataFrame], paths: EltPaths) -> None:
     """S6: analytics → CSV exports (single-file parity mode)."""
-    for name, df in results.items():
-        export_csv(df, os.path.join(paths.export_dir, name), single_file=True)
+    _concurrently(
+        next(iter(results.values())).sparkSession,
+        partial(export_csv, single_file=True),
+        [(df, os.path.join(paths.export_dir, name)) for name, df in results.items()],
+    )
 
 
 def run(

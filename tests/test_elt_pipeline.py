@@ -5,7 +5,10 @@ Covers the reference's flagship DAG semantics (SURVEY.md §3 E1):
 - incremental max-PK watermark load + idempotence (S3, J7) and the
   reviews append-only exception (S4, quirk Q7),
 - in-Spark transform producing the three analytics tables (S5/S9),
-- CSV export (S6).
+- CSV export (S6),
+- the per-table concurrency contract: failures re-raised after every
+  sibling finished, the caller's job group on every job, and no job while
+  the transform plans are built.
 """
 
 from __future__ import annotations
@@ -13,6 +16,8 @@ from __future__ import annotations
 import datetime as dt
 import glob
 import os
+import uuid
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
@@ -58,9 +63,7 @@ REVIEWS_CSV = """review,product_id
 """
 
 
-@pytest.fixture(scope="module")
-def paths(tmp_path_factory):
-    root = tmp_path_factory.mktemp("elt")
+def _fresh_paths(root):
     raw = root / "raw"
     raw.mkdir()
     (raw / "orders.csv").write_text(ORDERS_CSV)
@@ -71,6 +74,11 @@ def paths(tmp_path_factory):
         staging_dir=str(root / "staging"),
         export_dir=str(root / "export"),
     )
+
+
+@pytest.fixture(scope="module")
+def paths(tmp_path_factory):
+    return _fresh_paths(tmp_path_factory.mktemp("elt"))
 
 
 @pytest.fixture(scope="module")
@@ -128,6 +136,86 @@ def test_watermark_idempotence(spark, paths, results):
     assert after["orders"] == before["orders"] == 5
     assert after["shipment_deliveries"] == before["shipment_deliveries"] == 3
     assert after["reviews"] == before["reviews"] * 2
+
+
+def _jobs_started(spark, action, group):
+    """Run ``action`` under job group ``group``. Returns the ids of every
+    job it started and the ids of the jobs in ``group``. Job ids are
+    sequential, so the started ones lie between the ids of a marker job run
+    just before and one run just after."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker():
+        tag = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(tag, tag)
+        spark.range(1).collect()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return tracker.getJobIdsForGroup(tag)
+
+    try:
+        before = max(marker())
+        sc.setJobGroup(group, group)
+        action()
+        after = min(marker())
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return set(range(before + 1, after)), set(tracker.getJobIdsForGroup(group))
+
+
+def test_run_jobs_carry_callers_job_group(spark, tmp_path):
+    """Every job of the concurrent per-table work runs under the caller's
+    job group (the benchmark fold attributes jobs by it), and the thread
+    wrapper gets the session, so PySpark does not warn that tags are lost."""
+    p = _fresh_paths(tmp_path)
+    group = f"elt-{uuid.uuid4().hex}"
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        started, in_group = _jobs_started(spark, lambda: elt.run(spark, p, CFG), group)
+    assert started and started == in_group
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+
+
+def test_transform_starts_no_job(spark, paths, results):
+    """Staging is read with its declared schema: building the three
+    analytics plans runs no schema-inference job."""
+    started, _ = _jobs_started(
+        spark, lambda: elt.transform(spark, paths, CFG), f"t-{uuid.uuid4().hex}"
+    )
+    assert started == set()
+
+
+def test_crashed_first_append_does_not_block_load(spark, tmp_path):
+    """A first write that died leaves only ``_temporary/`` in the staging
+    directory. No row was committed, so the watermark is 0 and the batch
+    loads, instead of every later load failing to infer a schema."""
+    p = _fresh_paths(tmp_path)
+    os.makedirs(os.path.join(p.staging("orders"), "_temporary", "0"))
+    elt.load(spark, elt.extract(spark, p), p)
+    counts = {t: spark.read.parquet(p.staging(t)).count() for t in elt.STAGING_TABLES}
+    assert counts == {"orders": 5, "shipment_deliveries": 3, "reviews": 4}
+    # The declared read schema is exactly what the load writes.
+    for t in elt.STAGING_TABLES:
+        assert elt._staged(spark, p, t).schema == spark.read.parquet(p.staging(t)).schema
+
+
+def test_load_failure_reraised_after_siblings_finish(spark, tmp_path):
+    """One table's failure is re-raised (never taken for a first run), and
+    only once every sibling's work has finished."""
+    p = _fresh_paths(tmp_path)
+    os.makedirs(p.staging("shipment_deliveries"))
+    with open(os.path.join(p.staging("shipment_deliveries"), "part-0.parquet"), "w") as fh:
+        fh.write("not parquet")
+    with pytest.raises(Exception) as exc_info:
+        elt.load(spark, elt.extract(spark, p), p)
+    assert "PATH_NOT_FOUND" not in str(exc_info.value)
+    assert "shipment_deliveries" in str(exc_info.value)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    # The siblings ran to the end: both were appended.
+    assert spark.read.parquet(p.staging("orders")).count() == 5
+    assert spark.read.parquet(p.staging("reviews")).count() == 4
 
 
 def test_exports_written(paths, results):

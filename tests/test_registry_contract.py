@@ -308,3 +308,30 @@ def test_local_frames_go_through_session_helper():
             ):
                 offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not offenders, f"createDataFrame outside session.py: {offenders}"
+
+
+def test_package_threads_start_only_in_elt_helper():
+    """Every job a package thread starts must carry the caller's job group:
+    the benchmark fold and the per-query ledger attribute jobs by it. The
+    one place that starts threads, pipelines/elt.py:_concurrently, wraps
+    each call in inheritable_thread_target(spark); no other package code
+    may construct a Thread or a ThreadPoolExecutor."""
+    import ast
+
+    pkg = REPO / "data_pipeline__s3_to_postgres_s3_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        allowed = set()
+        if path == pkg / "pipelines" / "elt.py":
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name == "_concurrently":
+                    allowed = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or id(node) in allowed:
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            if name in ("Thread", "ThreadPoolExecutor"):
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert not offenders, f"thread started outside elt._concurrently: {offenders}"
