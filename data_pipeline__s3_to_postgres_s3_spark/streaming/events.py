@@ -55,6 +55,11 @@ from ..functions.numeric import cents
 
 SESSION_GAP = "30 minutes"
 _SINK_IDS = itertools.count()
+_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 _TS_DTYPES: dict[str, DataType] = {
     "bigint": LongType(),  # legacy TIMESTAMP(NANOS) under nanosAsLong
@@ -158,13 +163,26 @@ def run_to_memory(
     first start, and per-key Python stateful ops pay a worker round-trip
     per state partition per micro-batch — size it to key cardinality, not
     to the session's scan parallelism (32 partitions for 1.5k keys ran
-    3× slower than 8 at sf0.1)."""
+    3× slower than 8 at sf0.1).
+
+    The temp checkpoint this function creates is written through the
+    Hadoop FileSystem API (FileSystemBasedCheckpointFileManager), not
+    Spark's default FileContext manager. Without libhadoop the FileContext
+    rename forks a `readlink` process several times per file (752 forks
+    for perfbench ingest_mix's two streams), while the local FileSystem
+    rename is rename(2), atomic within one filesystem — so the
+    temp-file-then-rename protocol and the checksums stay. The choice
+    covers only this temp checkpoint (restored after, like the shuffle
+    partitions); the `chmod` fork of each file create remains."""
     spark = result.sparkSession
     name = query_name or f"stream_sink_{next(_SINK_IDS)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    overrides = {_CKPT_MANAGER_CONF: _FS_CKPT_MANAGER}
     if state_partitions:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        overrides["spark.sql.shuffle.partitions"] = str(state_partitions)
+    prev = {key: spark.conf.get(key, None) for key in overrides}
     try:
+        for key, value in overrides.items():
+            spark.conf.set(key, value)
         with tempfile.TemporaryDirectory(prefix="ckpt_") as ckpt:
             q = (
                 result.writeStream.format("memory")
@@ -176,8 +194,11 @@ def run_to_memory(
             )
             q.awaitTermination()
     finally:
-        if state_partitions:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
     return spark.table(name)
 
 

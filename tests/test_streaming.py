@@ -10,18 +10,23 @@ for a real unbounded deployment.
 
 from __future__ import annotations
 
+import contextlib
 import glob
+import os
 import shutil
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from data_pipeline__s3_to_postgres_s3_spark.catalog import load_events
 from data_pipeline__s3_to_postgres_s3_spark.streaming import (
     stream_hourly_rollup,
     stream_user_running_max,
 )
+from data_pipeline__s3_to_postgres_s3_spark.streaming.events import run_to_memory
 
 
 @pytest.fixture(scope="module")
@@ -651,3 +656,99 @@ def test_view_purchase_join_caps_bot_grade_hot_key(spark, tmp_path):
         for r in con.execute(STREAM_VIEW_PURCHASE_JOIN).fetchall()
     }
     assert oracle == want
+
+
+@contextlib.contextmanager
+def jvm_process_starts(spark, jfr_path):
+    """Record the processes the driver JVM starts inside the block: a JFR
+    recording with only jdk.ProcessStart enabled, dumped to jfr_path. The
+    yielded list holds each started command line once the block exits."""
+    jvm = spark._jvm
+    commands: list[str] = []
+    rec = jvm.jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try:
+        yield commands
+    finally:
+        rec.stop()
+        path = jvm.java.io.File(str(jfr_path)).toPath()
+        rec.dump(path)
+        rec.close()
+        commands.extend(
+            e.getString("command")
+            for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(path)
+        )
+
+
+def test_stream_checkpoint_forks_no_readlink(spark, split_events_dir, tmp_path):
+    """run_to_memory writes its temp checkpoint through the FileSystem API.
+    Without libhadoop, Spark's default FileContext manager forks `readlink`
+    for each file-status check in each atomic rename: 288 forks for this
+    3-file drop."""
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    for b in range(3):
+        shutil.copy(f"{split_events_dir}/events-{b}.parquet", drop)
+    with jvm_process_starts(spark, tmp_path / "spawns.jfr") as commands:
+        stream_hourly_rollup(spark, str(drop), max_files_per_trigger=1)
+    programs = [os.path.basename(c.split()[0]) for c in commands]
+    assert "readlink" not in programs
+    if not spark._jvm.org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded():
+        # Each checkpoint file create still forks chmod, so the recording
+        # saw the stream's file work.
+        assert "chmod" in programs
+
+
+_SHUFFLE_CONF = "spark.sql.shuffle.partitions"
+_CKPT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _held_confs(spark):
+    return spark.conf.get(_SHUFFLE_CONF), spark.conf.get(_CKPT_MANAGER_CONF, None)
+
+
+def _raise_in_state(key, pdfs, state):
+    raise RuntimeError("state function failed")
+    yield
+
+
+@pytest.mark.parametrize("case", ["caller_set", "unset", "query_fails"])
+def test_run_to_memory_restores_session_confs(spark, tmp_path, case):
+    """run_to_memory's shuffle-partition and checkpoint-manager overrides
+    are undone when it returns and when the query fails; an unset
+    checkpoint manager stays unset."""
+    spark.range(3).write.parquet(str(tmp_path / "in"))
+    src = spark.readStream.schema("id bigint").parquet(str(tmp_path / "in"))
+    before = _held_confs(spark)
+    try:
+        if case == "caller_set":
+            spark.conf.set(_SHUFFLE_CONF, "5")
+            spark.conf.set(
+                _CKPT_MANAGER_CONF,
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileContextBasedCheckpointFileManager",
+            )
+        else:
+            spark.conf.unset(_CKPT_MANAGER_CONF)
+        held = _held_confs(spark)
+        if case == "query_fails":
+            failing = src.groupBy("id").applyInPandasWithState(
+                _raise_in_state,
+                "id long",
+                "n long",
+                "append",
+                GroupStateTimeout.NoTimeout,
+            )
+            with pytest.raises(StreamingQueryException, match="state function failed"):
+                run_to_memory(failing, "append", state_partitions=3)
+        else:
+            counts = src.groupBy("id").count()
+            assert run_to_memory(counts, "complete", state_partitions=3).count() == 3
+        assert _held_confs(spark) == held
+    finally:
+        spark.conf.set(_SHUFFLE_CONF, before[0])
+        if before[1] is None:
+            spark.conf.unset(_CKPT_MANAGER_CONF)
+        else:
+            spark.conf.set(_CKPT_MANAGER_CONF, before[1])
