@@ -22,10 +22,6 @@ from data_pipeline__s3_to_postgres_s3_spark.config import default_sf_dir
 from data_pipeline__s3_to_postgres_s3_spark.registry import QUERIES
 from data_pipeline__s3_to_postgres_s3_spark.session import get_spark
 
-# Headline set: every registered query unless listed here (slow experimental
-# ops can be excluded explicitly).
-EXCLUDE: set[str] = set()
-
 
 def infer_sf(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -106,8 +102,6 @@ def main() -> None:
     # (r5→r6 burned hours reconciling pure position effects). Alphabetical
     # is stable across rounds regardless of rotation.
     for name in sorted(QUERIES):
-        if name in EXCLUDE:
-            continue
         fn = QUERIES[name]
         t0 = time.perf_counter()
         try:

@@ -23,6 +23,9 @@ realistic cardinality.
 
 from __future__ import annotations
 
+import glob
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -50,74 +53,118 @@ def _ensure_utc(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-# Relational measure representability bound (r13 extreme-money probe):
-# the universal integer-money discipline (cents() = CAST(ROUND(v·100)
-# AS BIGINT)) aborts under ANSI on NaN/±Inf/1e300 on BOTH engines —
-# 27 of 55 relational oracles red on a corrupted-measure feed. Same
-# contract as events.value: non-representable measures go NULL at the
-# load chokepoint, the ROW survives, and the r9 NULL-measures regime
-# (already mirrored in every oracle) takes over. Oracle twin: the
-# registry-level shadow-CTE prelude (registry._measure_shadow_ctes).
+# ---------------------------------------------------------------------------
+# Feed representability (r12/r13 extreme-value, -timestamp, -money probes)
+# ---------------------------------------------------------------------------
+# A corrupt feed may carry values no analytics can represent. NaN / ±Inf
+# abort the universal integer-money cast (cents() = CAST(ROUND(v·100) AS
+# BIGINT)) under ANSI on BOTH engines and rank engine-arbitrarily;
+# |v| > 1e12 is corruption, not revenue, and overflows the int64 cents
+# grid (≈ 9.2e16) once scaled; pre-epoch / post-2100 event timestamps
+# explode span-derived grids (one year-9999 ts OOM-killed the gapfill
+# grid) and ANSI month arithmetic. Such a value goes NULL at load and the
+# ROW survives, landing in the already-mirrored NULL regimes (the r6
+# events NULL matrix, the r9 NULL measures).
+#
+# FEED_GATES is the one declaration: every gated (table, column) with its
+# keep-predicate, written as SQL that both engines evaluate identically.
+# The Spark side applies it through ``gate_feed`` (batch loads and the
+# streaming readers); the oracle side is registry's shadow-CTE prelude,
+# which splices the same text into every oracle.
 MEASURE_ABS_MAX = 1000000000000.0
-MEASURE_COLS: dict[str, tuple[str, ...]] = {
-    "lineitem": ("l_quantity", "l_extendedprice", "l_discount", "l_tax"),
-    "orders": ("o_totalprice",),
-    "part": ("p_retailprice",),
-    "customer": ("c_acctbal",),
-    "supplier": ("s_acctbal",),
+EVENT_TS_MIN = "1970-01-01 00:00:00"
+EVENT_TS_MAX = "2100-01-01 00:00:00"
+_FINITE = (
+    "NOT isnan(CAST({c} AS DOUBLE)) AND "
+    f"abs(CAST({{c}} AS DOUBLE)) <= {MEASURE_ABS_MAX!r}"
+)
+# Half-open [MIN, MAX).
+_IN_WINDOW = (
+    f"CAST({{c}} AS TIMESTAMP) >= TIMESTAMP '{EVENT_TS_MIN}' AND "
+    f"CAST({{c}} AS TIMESTAMP) < TIMESTAMP '{EVENT_TS_MAX}'"
+)
+FEED_GATES: dict[str, dict[str, str]] = {
+    "lineitem": dict.fromkeys(
+        ("l_quantity", "l_extendedprice", "l_discount", "l_tax"), _FINITE
+    ),
+    "orders": {"o_totalprice": _FINITE},
+    "part": {"p_retailprice": _FINITE},
+    "customer": {"c_acctbal": _FINITE},
+    "supplier": {"s_acctbal": _FINITE},
+    "events": {"value": _FINITE, "ts": _IN_WINDOW},
 }
+
+
+def _normalize_feed(df: DataFrame, name: str) -> DataFrame:
+    """The encoding normalization a gate needs first: events ts."""
+    if name == "events" and "ts" in df.columns:
+        return normalize_event_ts(df)
+    return df
 
 
 # Per-file-version dirtiness memo: gating wraps columns in CASE, which
 # costs parquet predicate pushdown on exactly the columns users filter
-# (a measure-range scan predicate stops reaching PushedFilters). A
-# healthy corpus — the overwhelmingly common case — must not pay that,
-# so the gate engages ONLY when the feed actually contains a
-# non-representable value (the similarity `_dup_vec_ids` convention:
-# zero plan impact on clean data). The probe is one column-pruned
-# LIMIT-1 scan per (table, corpus_id) per process (cache.py); the oracle
-# mirrors are unconditional CASE views whose identity on clean data
-# keeps the two sides equal either way.
-def _measures_dirty(spark: SparkSession, sf_dir: str, name: str) -> bool:
+# (a measure-range or event-time scan predicate stops reaching
+# PushedFilters). A healthy corpus — the overwhelmingly common case —
+# must not pay that, so the gates engage ONLY when the feed actually
+# holds a non-representable value (zero plan impact on clean data). The
+# probe is one column-pruned LIMIT-1 scan per (table, corpus_id) per
+# process (cache.py); the oracle mirror is unconditional, and its
+# identity on clean data keeps the two sides equal either way. events
+# reads through the events* glob the file-stream source uses, so batch
+# and streaming agree on the verdict.
+def _feed_dirty(spark: SparkSession, sf_dir: str, name: str) -> bool:
+    pattern = "events*.parquet" if name == "events" else f"{name}.parquet"
+
     def build() -> bool:
-        df = _normalize_decimals(
-            spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        )
+        files = sorted(glob.glob(os.path.join(sf_dir, pattern)))
+        if len(files) > 1:
+            df = spark.read.option("pathGlobFilter", pattern).parquet(sf_dir)
+        else:
+            # A single FILE or a Spark-written DIRECTORY: a direct path
+            # read handles both, where pathGlobFilter matches only leaf
+            # file names and would see nothing inside the directory.
+            df = spark.read.parquet(files[0] if files else f"{sf_dir}/{pattern}")
+        df = _normalize_feed(_normalize_decimals(df), name)
         # Partial-schema fixtures (narrow projections of the table) are
-        # legal inputs: gate only the measure columns actually present.
-        cols = [c for c in MEASURE_COLS[name] if c in df.columns]
+        # legal inputs: probe only the gated columns actually present.
+        cols = [c for c in FEED_GATES[name] if c in df.columns]
         if not cols:
             return False
-        bad = None
-        for col in cols:
-            cd = F.col(col).cast("double")
-            b = F.isnan(cd) | (F.abs(cd) > MEASURE_ABS_MAX)
-            bad = b if bad is None else (bad | b)
+        bad = " OR ".join(f"NOT ({FEED_GATES[name][c].format(c=c)})" for c in cols)
         return df.select(*cols).where(bad).limit(1).count() > 0
 
-    return memo(
-        "measures_dirty", corpus_id(sf_dir, f"{name}.parquet"), (), build
-    )
+    kind = "events_dirty" if name == "events" else "measures_dirty"
+    return memo(kind, corpus_id(sf_dir, pattern), (), build)
+
+
+def gate_feed(
+    spark: SparkSession, sf_dir: str, name: str, df: DataFrame
+) -> DataFrame:
+    """``df``, read from feed ``name`` of ``sf_dir``, with the events ts
+    encoding normalized and ``FEED_GATES[name]`` applied: a
+    non-representable value goes NULL, the row survives. The gates
+    engage only when the feed holds such a value (``_feed_dirty``); on a
+    clean feed the plan is untouched. Batch loads and the streaming
+    readers all come through here."""
+    df = _normalize_feed(df, name)
+    if name not in FEED_GATES or not _feed_dirty(spark, sf_dir, name):
+        return df
+    for c, keep in FEED_GATES[name].items():
+        if c in df.columns:
+            df = df.withColumn(c, F.when(F.expr(keep.format(c=c)), F.col(c)))
+    return df
 
 
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, raw: bool = False
 ) -> DataFrame:
-    """``raw=True`` skips the measure representability gate — reserved
-    for the corruption DETECTORS (key_uniqueness_report's census must
-    see the raw feed; its oracle is exempt from the mirrors too)."""
+    """``raw=True`` skips the representability gates — reserved for the
+    corruption DETECTORS (key_uniqueness_report's census must see the
+    raw feed; its oracle is exempt from the mirror too)."""
     _ensure_utc(spark)
     df = _normalize_decimals(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    if not raw and name in MEASURE_COLS and _measures_dirty(
-        spark, sf_dir, name
-    ):
-        for col in MEASURE_COLS[name]:
-            if col not in df.columns:
-                continue
-            cd = F.col(col).cast("double")
-            keep = ~F.isnan(cd) & (F.abs(cd) <= MEASURE_ABS_MAX)
-            df = df.withColumn(col, F.when(keep, F.col(col)))
-    return df
+    return df if raw else gate_feed(spark, sf_dir, name, df)
 
 
 def scan_spread(
@@ -181,67 +228,7 @@ def _normalize_decimals(df: DataFrame) -> DataFrame:
     return df
 
 
-# events.ts representability window (r13 extreme-timestamp probe).
-# Half-open [MIN, MAX): pre-epoch values serve no analytics here and
-# far-future ones explode span-derived grids (gapfill) and ANSI month
-# arithmetic; both are corruption in a clickstream feed. Mirrored in
-# every oracle via the registry-level rewrite (_EVENTS_FEED_NORM).
-EVENT_TS_MIN = "1970-01-01 00:00:00"
-EVENT_TS_MAX = "2100-01-01 00:00:00"
-
-
-def _events_dirty(spark: SparkSession, sf_dir: str) -> bool:
-    """One LIMIT-1 probe per events corpus_id per process: does the feed
-    contain a non-representable ts or value? Gating wraps ts and value in
-    CASE, which costs scan-level predicate pushdown on exactly the
-    event-time/value filters — a clean feed (the common case) must not
-    pay that. Reads through the same events* glob the file-stream source
-    uses so batch and streaming agree on the verdict."""
-    import glob as _glob
-    import os
-
-    def build() -> bool:
-        files = sorted(_glob.glob(os.path.join(sf_dir, "events*.parquet")))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        if len(files) == 1:
-            # events.parquet may be a single FILE or a Spark-written
-            # DIRECTORY — a direct path read handles both, where
-            # pathGlobFilter matches only leaf file names and would see
-            # nothing inside the directory.
-            raw = spark.read.parquet(files[0])
-        else:
-            raw = spark.read.option(
-                "pathGlobFilter", "events*.parquet"
-            ).parquet(sf_dir)
-        raw = _normalize_decimals(raw)
-        checks = []
-        if "value" in raw.columns:
-            cd = F.col("value").cast("double")
-            checks.append(F.isnan(cd) | (F.abs(cd) > EVENT_VALUE_ABS_MAX))
-        if "ts" in raw.columns:
-            t = F.col("ts")
-            raw = normalize_event_ts(raw, gate=False)
-            checks.append(
-                t.isNotNull()
-                & (
-                    (t < F.lit(EVENT_TS_MIN).cast("timestamp"))
-                    | (t >= F.lit(EVENT_TS_MAX).cast("timestamp"))
-                )
-            )
-        if not checks:
-            return False
-        bad = checks[0]
-        for b in checks[1:]:
-            bad = bad | b
-        return raw.where(bad).limit(1).count() > 0
-
-    cid = corpus_id(sf_dir, "events*.parquet")
-    return bool(cid) and memo("events_dirty", cid, (), build)
-
-
-def normalize_event_ts(
-    ev: DataFrame, col: str = "ts", gate: bool = True
-) -> DataFrame:
+def normalize_event_ts(ev: DataFrame, col: str = "ts") -> DataFrame:
     """Normalize an event-timestamp column to TIMESTAMP (LTZ) regardless of
     the encoding the producer wrote — external data arrives in whatever
     layout the source chose (cf. the reference's S7 ingestion contract,
@@ -264,70 +251,15 @@ def normalize_event_ts(
         ev = ev.withColumn(col, F.expr(f"timestamp_micros({col} DIV 1000)"))
     elif dt == "timestamp_ntz":
         ev = ev.withColumn(col, F.col(col).cast("timestamp"))
-    # Representability window (r13 extreme-timestamp probe): pre-epoch
-    # and far-future timestamps are feed corruption, not events — a
-    # single year-9999 ts OOM-killed the probe JVM outright (the
-    # min-to-max gapfill grid spans 8000 years of hours) and year-9999
-    # month arithmetic overflows DATE under ANSI. Out-of-window ts goes
-    # NULL and the ROW survives, landing in the ALREADY-PINNED NULL-ts
-    # regime (stream readers drop; batch windows pin NULLS FIRST — the
-    # r6 events NULL matrix). Mirrored once at the registry level
-    # (_EVENTS_FEED_NORM), the normalize_event_value pattern.
-    # ``gate=False`` = encoding normalization only: the _events_dirty
-    # probe itself, and clean feeds (where skipping the CASE wrap keeps
-    # event-time predicates in PushedFilters).
-    if gate:
-        c = F.col(col)
-        ev = ev.withColumn(
-            col,
-            F.when(
-                (c >= F.lit(EVENT_TS_MIN).cast("timestamp"))
-                & (c < F.lit(EVENT_TS_MAX).cast("timestamp")),
-                c,
-            ),
-        )
     return ev
-
-
-# events.value representability bound: the universal integer-money
-# discipline (cents() = CAST(ROUND(v·100) AS BIGINT)) tops out near
-# int64/100 ≈ 9.2e16 — values beyond 1e12 are feed corruption, not
-# revenue, and overflow the cast on BOTH engines.
-EVENT_VALUE_ABS_MAX = 1000000000000.0
-
-
-def normalize_event_value(
-    ev: DataFrame, col: str = "value", gate: bool = True
-) -> DataFrame:
-    """Non-REPRESENTABLE event values go NULL; the ROW survives (r12
-    extreme-value probe — 17/34 events queries red on a NaN/Inf/1e300
-    feed): NaN and ±Inf abort every ANSI cents() cast (and their rank
-    position is engine-arbitrary), and |v| > EVENT_VALUE_ABS_MAX
-    overflows the int64 cents grid on BOTH engines. NULLing instead of
-    dropping keeps the event in sessions/funnels/counts, and the NULL
-    then flows through the r6 NULL-value discipline already mirrored in
-    every oracle. The oracle twin is the registry-level `FROM events`
-    rewrite (registry._EVENTS_FEED_NORM); a verified no-op on sane
-    corpora."""
-    if not gate:
-        return ev
-    cd = F.col(col).cast("double")
-    keep = ~F.isnan(cd) & (F.abs(cd) <= EVENT_VALUE_ABS_MAX)
-    return ev.withColumn(col, F.when(keep, F.col(col)))
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with a proper TIMESTAMP ``ts`` (see ``normalize_event_ts``
     for the encodings accepted) and ``ts``/``value`` gated to the
-    representable ranges — the gates engage only when the feed actually
-    carries a non-representable value (``_events_dirty``), so clean
-    plans keep scan-level ts/value pushdown."""
+    representable ranges (``gate_feed``)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    g = _events_dirty(spark, sf_dir)
-    return normalize_event_value(
-        normalize_event_ts(load_table(spark, sf_dir, "events"), gate=g),
-        gate=g,
-    )
+    return load_table(spark, sf_dir, "events")
 
 
 # ---------------------------------------------------------------------------

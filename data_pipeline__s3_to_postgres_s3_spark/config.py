@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -39,8 +39,6 @@ class EngineConfig:
     # Incremental-load watermark simulation: the "already loaded" target
     # holds orders with order_id < watermark_seed (catalog-independent).
     watermark_seed: int = 1000
-
-    extra_spark_conf: dict = field(default_factory=dict)
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -11,6 +11,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import FEED_GATES
 from .operators.best_product import (
     best_performing_product,
     most_ordered_product_date,
@@ -737,92 +738,75 @@ ORACLES: dict[str, str] = {
     "sql_script_best_product": PARITY_ORACLES["best_performing_product"],
 }
 
-# events feed-representability mirror — every oracle reads events
-# through a view that NULLs non-representable VALUES
-# (catalog.normalize_event_value, r12 extreme-value probe: NaN / ±Inf
-# abort the ANSI cents cast on BOTH engines and rank
-# engine-arbitrarily; |v| > 1e12 overflows the int64 cents grid) and
-# non-representable TIMESTAMPS (catalog.normalize_event_ts, r13
-# extreme-timestamp probe: pre-epoch / post-2100 ts explode
-# span-derived grids and ANSI month arithmetic — out-of-window ts goes
-# NULL, the row survives, and the pinned NULL-ts regime takes over).
-# Applied at THIS single chokepoint so no oracle can drift from the
-# Spark-side gates. The rewrite is a plain-text substitution of the
-# table reference — idempotent where a fragment is already wrapped
-# (normalizing twice is the identity) and a no-op for oracles that
-# never read events.
-_EVENTS_FEED_NORM = (
-    "(SELECT * REPLACE (CASE WHEN NOT isnan(CAST(value AS DOUBLE)) AND "
-    "abs(CAST(value AS DOUBLE)) <= 1000000000000.0 THEN value END "
-    "AS value, "
-    "CASE WHEN CAST(ts AS TIMESTAMP) >= TIMESTAMP '1970-01-01 00:00:00' "
-    "AND CAST(ts AS TIMESTAMP) < TIMESTAMP '2100-01-01 00:00:00' "
-    "THEN ts END AS ts) FROM events)"
-)
+# Feed-representability mirror: the oracle twin of catalog.FEED_GATES.
+# Each non-exempt oracle gets a SHADOW-CTE prelude — `WITH lineitem AS
+# (SELECT * REPLACE (CASE WHEN <keep> THEN l_quantity END AS l_quantity,
+# ...) FROM main.lineitem), events AS (...)` — for every gated table it
+# names, with the keep-predicates catalog declares. A CTE named after the
+# table wins name resolution for EVERY reference form (FROM, JOIN,
+# comma-join, nested subqueries, later CTEs, any letter case), so no text
+# surgery inside the oracle is needed and no spelling can escape the
+# mirror; `main.` qualifies the base view to avoid the circular-CTE
+# binder error. Unused shadows are harmless (never bound).
+#
 # Raw-feed exemptions (r12 ADVICE): key_uniqueness_report is the
 # duplicate/corruption DETECTOR — its Spark side reads every table via
 # load_table(raw=True) (profiling.py KEY_SPECS loop), never the gated
-# loaders, so its oracle must see the raw feed too. Rewriting it would
+# loaders, so its oracle must see the raw feed too. Mirroring it would
 # split the engines on a corpus whose duplicate keys differ only in
-# non-representable values (NaN vs Inf — both NULL after the rewrite,
+# non-representable values (NaN vs Inf — both NULL after the gate,
 # distinct raw). Pinned: tests/test_extreme_value_robustness.py.
 # schema_snapshot_report (r14) is the schema-drift detector under the
-# same contract: raw reads, information_schema introspection — the
-# mirrors are value rewrites and must not intervene between it and the
-# physical feed.
-_EVENTS_RAW_ORACLES = frozenset(
+# same contract: raw reads, information_schema introspection.
+_RAW_FEED_ORACLES = frozenset(
     {"key_uniqueness_report", "schema_snapshot_report"}
 )
-# Alias for the general contract (events + relational measures).
-_RAW_FEED_ORACLES = _EVENTS_RAW_ORACLES
-ORACLES = {
-    name: sql
-    if name in _EVENTS_RAW_ORACLES
-    else sql.replace("FROM events", f"FROM {_EVENTS_FEED_NORM}")
-    for name, sql in ORACLES.items()
-}
-
-# Relational measure-representability mirror (catalog.MEASURE_COLS —
-# r13 extreme-money probe: NaN/±Inf/±1e300 in the star schema's
-# measures abort the ANSI cents cast on both engines; 27/55 relational
-# oracles red). The Spark gate lives in catalog.load_table; the oracle
-# twin is a SHADOW CTE prelude — `WITH lineitem AS (SELECT * REPLACE
-# (...) FROM main.lineitem), ...` — spliced ahead of each oracle that
-# references a gated table. A shadowing CTE wins name resolution for
-# EVERY reference form (FROM, JOIN, comma-join, nested subqueries,
-# later CTEs), so no text surgery inside the oracle is needed and no
-# spelling can silently escape the mirror; `main.` qualifies the base
-# view to avoid the circular-CTE binder error. Unused shadows are
-# harmless (never materialized). Raw-feed detectors stay exempt.
-_MEASURE_NORM_TABLES = (
-    ("lineitem", ("l_quantity", "l_extendedprice", "l_discount", "l_tax")),
-    ("orders", ("o_totalprice",)),
-    ("part", ("p_retailprice",)),
-    ("customer", ("c_acctbal",)),
-    ("supplier", ("s_acctbal",)),
-)
-
 
 # Leading whitespace / `--` comment lines — stripped before the WITH
 # detection so a commented oracle header can't demote the splice to a
 # (syntactically broken) WITH-before-WITH (r13 ADVICE).
 _SQL_LEAD_RE = re.compile(r"^(?:\s*--[^\n]*\n|\s+)*")
+_GATED_ALT = "|".join(FEED_GATES)
+# Word boundaries (r13 ADVICE): a bare substring test made 'part' match
+# PARTITION BY / p_partkey (_ is a word char, so p_partkey never matches).
+_GATED_REF_RE = re.compile(rf"\b({_GATED_ALT})\b", re.IGNORECASE)
+_MAIN_REF_RE = re.compile(rf"\bmain\.({_GATED_ALT})\b", re.IGNORECASE)
+_CTE_COLLISION_RE = re.compile(rf"\b({_GATED_ALT})\s+AS\s*\(", re.IGNORECASE)
 
 
-def _measure_shadow_ctes(sql: str) -> str:
+def _feed_mirror(name: str, sql: str) -> str:
+    """``sql`` with the shadow-CTE prelude spliced ahead of it, or
+    unchanged for a raw-feed oracle. Raises (a plain ``raise``, not an
+    ``assert``, which python -O compiles out) on the two forms the
+    prelude cannot cover: a `main.<gated>` reference, which no shadow
+    captures, and an oracle CTE named after a gated table, which would
+    collide with the shadow (a duplicate-CTE binder error only when the
+    oracle runs)."""
+    if name in _RAW_FEED_ORACLES:
+        return sql
+    m = _MAIN_REF_RE.search(sql)
+    if m is not None:
+        raise RuntimeError(
+            f"oracle {name!r} references the gated table {m.group(0)!r} "
+            "with a main. qualifier, which the shadow-CTE mirror cannot "
+            "capture — drop the qualifier, or add the oracle to "
+            "_RAW_FEED_ORACLES if it must read the raw feed"
+        )
+    m = _CTE_COLLISION_RE.search(sql)
+    if m is not None:
+        raise RuntimeError(
+            f"oracle {name!r} declares a CTE named after the gated table "
+            f"{m.group(1)!r} — it would collide with the spliced shadow "
+            "CTE (duplicate-CTE binder error); rename the CTE"
+        )
+    named = {t.lower() for t in _GATED_REF_RE.findall(sql)}
     shadows = []
-    for table, cols in _MEASURE_NORM_TABLES:
-        # Word-boundary match (r13 ADVICE): a bare substring test made
-        # 'part' match PARTITION BY / p_partkey and spliced harmless but
-        # noisy unused shadows. (_ is a word char, so p_partkey still
-        # never matches.)
-        if not re.search(rf"\b{table}\b", sql):
+    for table, gates in FEED_GATES.items():
+        if table not in named:
             continue
         reps = ", ".join(
-            f"CASE WHEN NOT isnan(CAST({c} AS DOUBLE)) AND "
-            f"abs(CAST({c} AS DOUBLE)) <= 1000000000000.0 THEN {c} END "
-            f"AS {c}"
-            for c in cols
+            f"CASE WHEN {keep.format(c=c)} THEN {c} END AS {c}"
+            for c, keep in gates.items()
         )
         shadows.append(f"{table} AS (SELECT * REPLACE ({reps}) FROM main.{table})")
     if not shadows:
@@ -830,86 +814,11 @@ def _measure_shadow_ctes(sql: str) -> str:
     prelude = ",\n".join(shadows)
     lead = _SQL_LEAD_RE.match(sql).group(0)
     stripped = sql[len(lead):]
-    if stripped.upper().startswith("WITH RECURSIVE"):
-        head = stripped[: len("WITH RECURSIVE")]
-        return f"{lead}{head} {prelude},\n{stripped[len(head):].lstrip()}"
-    if stripped.upper().startswith("WITH"):
-        head = stripped[: len("WITH")]
-        return f"{lead}{head} {prelude},\n{stripped[len(head):].lstrip()}"
+    for head in ("WITH RECURSIVE", "WITH"):
+        if stripped.upper().startswith(head):
+            rest = stripped[len(head):].lstrip()
+            return f"{lead}{stripped[:len(head)]} {prelude},\n{rest}"
     return f"{lead}WITH {prelude}\n{stripped}"
 
 
-ORACLES = {
-    name: sql
-    if name in _RAW_FEED_ORACLES
-    else _measure_shadow_ctes(sql)
-    for name, sql in ORACLES.items()
-}
-
-# Assembly-time guard (r12 ADVICE): the rewrite above is a case- and
-# whitespace-sensitive substring replace — an oracle written as
-# 'from events', 'FROM\n    events', or 'JOIN events' would silently
-# skip value normalization and drift from the Spark-side gate. Fail at
-# import instead: after stripping wrapped fragments, no non-exempt
-# oracle may still reference the events table.
-# A plain `raise`, NOT `assert` (r13 ADVICE): asserts compile out under
-# python -O / PYTHONOPTIMIZE, silently disabling the drift guard exactly
-# where a deployment flag could flip it off.
-_EVENTS_REF_RE = re.compile(r"\b(from|join)\s+events\b", re.IGNORECASE)
-for _name, _sql in ORACLES.items():
-    if _name in _EVENTS_RAW_ORACLES:
-        continue
-    _residue = _sql.replace(_EVENTS_FEED_NORM, "")
-    _m = _EVENTS_REF_RE.search(_residue)
-    if _m is not None:
-        raise RuntimeError(
-            f"oracle {_name!r} references the events table as {_m.group(0)!r}, "
-            "which the _EVENTS_FEED_NORM rewrite cannot see — write it as "
-            "'FROM events' (exact case, single space) or add the oracle to "
-            "_EVENTS_RAW_ORACLES if it must read the raw feed"
-        )
-
-# Assembly-time guard for the SHADOW-CTE mirror (r13 ADVICE — the events
-# rewrite above already had one, this rewrite did not): a non-exempt
-# oracle must not (a) reference a gated table as `main.<table>` — the
-# shadow CTE cannot capture a qualified reference, so the raw feed would
-# silently escape the mirror — nor (b) declare its OWN CTE named after a
-# gated table, which would collide with the spliced shadow (duplicate-CTE
-# binder error at oracle runtime, i.e. only when the driver runs it).
-_GATED_TABLES_ALT = "|".join(t for t, _ in _MEASURE_NORM_TABLES)
-_MAIN_REF_RE = re.compile(rf"\bmain\.({_GATED_TABLES_ALT})\b", re.IGNORECASE)
-_CTE_COLLISION_RE = re.compile(
-    rf"\b({_GATED_TABLES_ALT})\s+AS\s*\(", re.IGNORECASE
-)
-for _name, _sql in ORACLES.items():
-    if _name in _RAW_FEED_ORACLES:
-        continue
-    # Strip the spliced shadow prelude (its own text legitimately says
-    # `<table> AS (… FROM main.<table>)`) before scanning the residue.
-    _residue = _sql
-    for _tbl, _cols in _MEASURE_NORM_TABLES:
-        _reps = ", ".join(
-            f"CASE WHEN NOT isnan(CAST({_c} AS DOUBLE)) AND "
-            f"abs(CAST({_c} AS DOUBLE)) <= 1000000000000.0 THEN {_c} END "
-            f"AS {_c}"
-            for _c in _cols
-        )
-        _residue = _residue.replace(
-            f"{_tbl} AS (SELECT * REPLACE ({_reps}) FROM main.{_tbl})", ""
-        )
-    _m = _MAIN_REF_RE.search(_residue)
-    if _m is not None:
-        raise RuntimeError(
-            f"oracle {_name!r} references the gated table {_m.group(0)!r} "
-            "with a main. qualifier, which the shadow-CTE mirror cannot "
-            "capture — drop the qualifier, or add the oracle to "
-            "_RAW_FEED_ORACLES if it must read the raw feed"
-        )
-    _m = _CTE_COLLISION_RE.search(_residue)
-    if _m is not None:
-        raise RuntimeError(
-            f"oracle {_name!r} declares a CTE named after the gated table "
-            f"{_m.group(1)!r} — it would collide with the spliced shadow "
-            "CTE (duplicate-CTE binder error); rename the CTE"
-        )
-del _name, _sql
+ORACLES = {name: _feed_mirror(name, sql) for name, sql in ORACLES.items()}

@@ -50,7 +50,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..catalog import normalize_event_ts, normalize_event_value
+from ..catalog import gate_feed
 from ..functions.numeric import cents
 
 SESSION_GAP = "30 minutes"
@@ -94,8 +94,8 @@ def read_events_stream(
     parquet footer read — no data scan): declaring LongType against a
     timestamp[us] file would reinterpret micros as nanos and silently shrink
     every timestamp 1000×, so the stream schema MUST follow the file. The
-    same ``normalize_event_ts`` helper as the batch path then maps whatever
-    was found to TIMESTAMP, keeping batch and streaming consumers
+    same ``catalog.gate_feed`` as the batch path then maps whatever was
+    found to TIMESTAMP, keeping batch and streaming consumers
     encoding-identical by construction."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     glob = "events*.parquet"
@@ -116,22 +116,16 @@ def read_events_stream(
     # identically) agree on the row set. ts/values gate to the
     # representable ranges exactly like the batch path (r12/r13
     # extreme-value/timestamp probes), via the SAME per-file-set
-    # dirtiness verdict (catalog._events_dirty — a static probe over
-    # the identical glob), so clean streams keep event-time pushdown.
+    # dirtiness verdict (catalog.gate_feed — a static probe over the
+    # identical glob), so clean streams keep event-time pushdown.
     # CAVEAT (r13 ADVICE, same class as the one-batch-lag watermark
     # note on dropDuplicates): the verdict is taken ONCE, at stream
     # DEFINITION time, over the files present then — files landing
     # later in a multi-batch run bypass the gate until the stream is
     # redefined. The driver's single-AvailableNow-batch replays are
-    # safe; a long-lived multi-batch deployment must either redefine
-    # the stream on drop-zone changes or force gate=True.
-    from ..catalog import _events_dirty
-
-    g = _events_dirty(spark, sf_dir)
-    return normalize_event_value(
-        normalize_event_ts(ev, gate=g).where(F.col("ts").isNotNull()),
-        gate=g,
-    )
+    # safe; a long-lived multi-batch deployment must redefine the
+    # stream on drop-zone changes.
+    return gate_feed(spark, sf_dir, "events", ev).where(F.col("ts").isNotNull())
 
 
 def state_parts(spark: SparkSession, cap: int) -> int:
@@ -728,10 +722,8 @@ def _admitted_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     state lives in the destination, not the job)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     ev = spark.read.option("pathGlobFilter", "events*.parquet").parquet(sf_dir)
-    from ..catalog import _events_dirty
-
     v = (
-        normalize_event_ts(ev, gate=_events_dirty(spark, sf_dir))
+        gate_feed(spark, sf_dir, "events", ev)
         .where(F.col("ts").isNotNull() & (F.col("event_type") == "view"))
         .select(
             "user_id",

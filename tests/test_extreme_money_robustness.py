@@ -8,12 +8,13 @@ engines: the feed was un-processable) plus engine-arbitrary NaN ranks.
 
 The contract (the r12 events.value pattern): measures outside the
 representable range go NULL at the load chokepoint
-(catalog.load_table's MEASURE_COLS gate — |v| > MEASURE_ABS_MAX = the
-int64 cents bound, NaN, ±Inf) while the ROW survives, landing in the
-r9 NULL-measures regime every oracle already mirrors. The oracle twin
-is the registry-level SHADOW-CTE prelude (registry._measure_shadow_ctes
-— a CTE named after the table wins name resolution for every reference
-form, so no spelling can escape the mirror). The raw-feed census
+(catalog.load_table → catalog.gate_feed over catalog.FEED_GATES —
+|v| > MEASURE_ABS_MAX = the int64 cents bound, NaN, ±Inf) while the ROW
+survives, landing in the r9 NULL-measures regime every oracle already
+mirrors. The oracle twin is the registry-level SHADOW-CTE prelude
+(registry._feed_mirror, built from the same FEED_GATES — a CTE named
+after the table wins name resolution for every reference form, so no
+spelling can escape the mirror). The raw-feed census
 (key_uniqueness_report) is exempt on BOTH sides: it reads via
 load_table(raw=True) and its oracle is in _RAW_FEED_ORACLES.
 """
@@ -115,11 +116,11 @@ def test_measure_gate_is_noop_on_sane_values(spark, sf_small):
     """The chokepoint must be invisible on a healthy corpus: the gated
     load equals the raw load bit-for-bit, for every gated table."""
     from data_pipeline__s3_to_postgres_s3_spark.catalog import (
-        MEASURE_COLS,
+        FEED_GATES,
         load_table,
     )
 
-    for t in MEASURE_COLS:
+    for t in sorted(FEED_GATES.keys() - {"events"}):
         gated = load_table(spark, sf_small, t)
         raw = load_table(spark, sf_small, t, raw=True)
         assert gated.count() == raw.count(), t

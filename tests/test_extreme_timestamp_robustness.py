@@ -15,14 +15,14 @@ events-reading oracles) found two real classes before the fix:
   a NULL group — the one oracle (events_sliding_value) that windowed
   without the NULL filter diverged once the gate NULLed extreme ts.
 
-The contract (the normalize_event_value pattern): timestamps outside
-the representability window [EVENT_TS_MIN, EVENT_TS_MAX) go NULL at the
-chokepoint (catalog.normalize_event_ts — batch AND streaming) while the
-ROW survives, landing in the ALREADY-PINNED NULL-ts regime (stream
-readers drop NULL-ts rows with the mirrored oracle filter; batch
-windows pin NULLS FIRST — the r6 events NULL matrix). The oracle twin
-is the registry-level `FROM events` rewrite (_EVENTS_FEED_NORM), which
-normalizes value and ts in ONE wrapped view.
+The contract (the events.value pattern): timestamps outside the
+representability window [EVENT_TS_MIN, EVENT_TS_MAX) go NULL at the
+chokepoint (catalog.gate_feed — batch AND streaming) while the ROW
+survives, landing in the ALREADY-PINNED NULL-ts regime (stream readers
+drop NULL-ts rows with the mirrored oracle filter; batch windows pin
+NULLS FIRST — the r6 events NULL matrix). The oracle twin is the
+registry-level shadow-CTE prelude (registry._feed_mirror): an `events`
+CTE that gates value and ts, built from the same catalog.FEED_GATES.
 
 The identical-(user, ts) pileups pass WITHOUT new pins: every
 rank/path/OHLC/as-of consumer already tiebreaks on event_id (the r12

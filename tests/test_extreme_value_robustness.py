@@ -12,12 +12,13 @@ found 17 of 34 events-family queries red in two classes:
 
 The contract (the r10 embeddings non-finite precedent): values outside
 the representable range go NULL at the load chokepoint
-(catalog.normalize_event_value — NaN, ±Inf, |v| > EVENT_VALUE_ABS_MAX)
+(catalog.gate_feed — NaN, ±Inf, |v| > catalog.MEASURE_ABS_MAX)
 while the ROW survives (a broken value must not delete the event from
 sessions/funnels/counts); the NULL then flows through the r6 NULL-value
-discipline already mirrored in every oracle. The oracle twin is the
-registry-level rewrite of every `FROM events` reference through
-_EVENTS_FEED_NORM — one chokepoint per side, no per-query drift.
+discipline already mirrored in every oracle. Both sides are built from
+one declaration, catalog.FEED_GATES: the Spark gate is catalog.gate_feed
+and the oracle twin is the registry-level shadow-CTE prelude
+(registry._feed_mirror) — one chokepoint per side, no per-query drift.
 """
 
 from __future__ import annotations
@@ -167,8 +168,8 @@ def dup_extreme_events_dir(sf_small, tmp_path_factory):
 def test_census_sees_raw_feed_under_dup_extreme_values(
     spark, dup_extreme_events_dir
 ):
-    """key_uniqueness_report is exempt from the _EVENTS_FEED_NORM
-    oracle rewrite (registry._EVENTS_RAW_ORACLES): its Spark side reads
+    """key_uniqueness_report is exempt from the shadow-CTE oracle
+    mirror (registry._RAW_FEED_ORACLES): its Spark side reads
     events RAW via load_table, so a rewritten oracle would under-count
     conflict_keys exactly on the corpus the census exists to detect."""
     con = duckdb_connection(dup_extreme_events_dir)
@@ -194,39 +195,84 @@ def test_census_sees_raw_feed_under_dup_extreme_values(
 
 def test_census_oracle_is_exempt_from_value_rewrite():
     from data_pipeline__s3_to_postgres_s3_spark.registry import (
-        _EVENTS_RAW_ORACLES,
-        _EVENTS_FEED_NORM,
+        _RAW_FEED_ORACLES,
     )
 
-    assert "key_uniqueness_report" in _EVENTS_RAW_ORACLES
-    assert _EVENTS_FEED_NORM not in ORACLES["key_uniqueness_report"]
+    assert "key_uniqueness_report" in _RAW_FEED_ORACLES
+    assert "main.events" not in ORACLES["key_uniqueness_report"]
 
 
-def test_events_reference_guard_catches_unwrapped_forms():
-    """The assembly-time guard in registry.py must catch every spelling
-    the plain-text rewrite cannot see (r12 ADVICE low)."""
+def _mirror_con():
+    """A tiny in-memory corpus: one sane event, a NaN value, and a
+    1e300 value at a year-9999 ts; one lineitem row with a NaN quantity
+    and a 1e300 price."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM (VALUES "
+        "(1, TIMESTAMP '2024-01-01 00:00:00', 5.0::DOUBLE), "
+        "(2, TIMESTAMP '2024-01-02 00:00:00', 'NaN'::DOUBLE), "
+        "(3, TIMESTAMP '9999-06-01 00:00:00', 1e300::DOUBLE)"
+        ") t(event_id, ts, value)"
+    )
+    con.execute(
+        "CREATE VIEW lineitem AS SELECT * FROM (VALUES "
+        "(1, 'NaN'::DOUBLE, 1e300::DOUBLE, 0.1::DOUBLE, 0.2::DOUBLE)"
+        ") t(l_orderkey, l_quantity, l_extendedprice, l_discount, l_tax)"
+    )
+    return con
+
+
+def test_feed_mirror_covers_every_spelling():
+    """One shadow-CTE prelude mirrors catalog.FEED_GATES for every
+    reference spelling and letter case: the planted non-representables
+    come back NULL."""
+    from data_pipeline__s3_to_postgres_s3_spark.registry import _feed_mirror
+
+    con = _mirror_con()
+    want = [
+        (1, 5.0, dt.datetime(2024, 1, 1)),
+        (2, None, dt.datetime(2024, 1, 2)),
+        (3, None, None),
+    ]
+    for sql in (
+        "SELECT event_id, value, ts from events ORDER BY 1",
+        "SELECT event_id, value, ts FROM\n    events ORDER BY 1",
+        "SELECT e.event_id, e.value, e.ts FROM (SELECT 1 AS k) o "
+        "JOIN events e ON TRUE ORDER BY 1",
+        "SELECT event_id, value, ts From Events ORDER BY 1",
+    ):
+        assert con.execute(_feed_mirror("q", sql)).fetchall() == want, sql
+    sql = "SELECT l_quantity, l_extendedprice, l_tax FROM LineItem"
+    assert con.execute(_feed_mirror("q", sql)).fetchall() == [(None, None, 0.2)]
+
+
+def test_feed_mirror_leaves_raw_feed_oracles_unchanged():
     from data_pipeline__s3_to_postgres_s3_spark.registry import (
-        _EVENTS_REF_RE,
-        _EVENTS_FEED_NORM,
+        _RAW_FEED_ORACLES,
+        _feed_mirror,
     )
 
-    bad = [
-        "SELECT * from events",
-        "SELECT * FROM\n    events",
-        "SELECT * FROM orders JOIN events USING (event_id)",
-        "SELECT * From Events WHERE 1=1",
-    ]
-    for sql in bad:
-        assert _EVENTS_REF_RE.search(sql.replace(_EVENTS_FEED_NORM, "")), sql
-    ok = [
-        "SELECT * FROM events_per_user",
-        "SELECT * FROM my_events",
-        f"SELECT * FROM {_EVENTS_FEED_NORM}",
-    ]
-    for sql in ok:
-        assert not _EVENTS_REF_RE.search(
-            sql.replace(_EVENTS_FEED_NORM, "")
-        ), sql
+    assert _RAW_FEED_ORACLES == {"key_uniqueness_report", "schema_snapshot_report"}
+    for name in _RAW_FEED_ORACLES:
+        sql = "SELECT * FROM events JOIN lineitem ON TRUE"
+        assert _feed_mirror(name, sql) == sql
+
+
+def test_feed_mirror_guard_rejects_uncoverable_forms():
+    """A `main.<gated>` reference escapes every shadow, and an oracle CTE
+    named after a gated table collides with one: both fail at assembly."""
+    from data_pipeline__s3_to_postgres_s3_spark.registry import _feed_mirror
+
+    for sql in (
+        "SELECT * FROM main.events",
+        "SELECT * FROM main.lineitem",
+        "WITH events AS (SELECT 1 AS x) SELECT * FROM events",
+        "WITH orders AS (SELECT 1 AS x) SELECT * FROM orders",
+    ):
+        with pytest.raises(RuntimeError):
+            _feed_mirror("q", sql)
 
 
 def test_value_normalization_is_noop_on_sane_values(spark, sf_small):

@@ -335,3 +335,27 @@ def test_package_threads_start_only_in_elt_helper():
             if name in ("Thread", "ThreadPoolExecutor"):
                 offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not offenders, f"thread started outside elt._concurrently: {offenders}"
+
+
+_FEED_BOUNDS = ("1000000000000", "1970-01-01 00:00:00", "2100-01-01 00:00:00")
+
+
+def _feed_bound_sites(texts: dict[str, str]) -> dict[str, list[str]]:
+    """For each representability bound, the package files spelling it."""
+    return {b: sorted(p for p, t in texts.items() if b in t) for b in _FEED_BOUNDS}
+
+
+def test_feed_bounds_are_spelled_only_in_catalog():
+    """catalog.FEED_GATES is the one declaration of the representability
+    policy: the Spark gates and the oracle mirror are both rendered from
+    it, so a bound copied into another module (the registry once held
+    three) would let the two sides drift apart unnoticed."""
+    pkg = REPO / "data_pipeline__s3_to_postgres_s3_spark"
+    texts = {
+        p.relative_to(pkg).as_posix(): p.read_text(encoding="utf-8")
+        for p in sorted(pkg.rglob("*.py"))
+    }
+    assert _feed_bound_sites(texts) == {b: ["catalog.py"] for b in _FEED_BOUNDS}
+    # The scan sees a planted copy.
+    texts["registry.py"] += "\n_COPY = 'abs(v) <= 1000000000000.0'\n"
+    assert _feed_bound_sites(texts)["1000000000000"] == ["catalog.py", "registry.py"]

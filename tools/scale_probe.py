@@ -228,8 +228,6 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    import duckdb
-
     # Unlike verify_window's driver-faithful plain session (1 GiB heap —
     # fine at sf0.01), the probe sizes the heap for sf1-shaped inputs: a
     # long shared session at this scale evicts localCheckpoint blocks
@@ -247,18 +245,10 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
-    from oracle_harness import compare
+    from oracle_harness import compare, duckdb_connection
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{out}/{t}.parquet')"
-        )
+    con = duckdb_connection(out)
 
     # Size-dispatched facades whose LARGE branch is documented
     # best-effort vs the exact-branch oracle: above the pair budget the
