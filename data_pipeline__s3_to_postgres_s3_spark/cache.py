@@ -1,4 +1,4 @@
-"""One corpus identity and one process memo.
+"""One corpus identity, one process memo, one lineage cut.
 
 Every reuse in the engine (catalog dirtiness probes, similarity index
 metadata, the dedup/graph lineage-cut frames, the sql_script plans) is a
@@ -13,9 +13,14 @@ table) contributing every file under it. ``memo`` is the one dict:
 identity. Frame-valued entries (a DataFrame or a dict of them) also
 carry the SparkContext applicationId. A new entry for the same kind and
 paths with another file identity or application supersedes the old ones;
-a superseded ``localCheckpoint`` frame has its blocks unpersisted. An
-empty identity (nothing matches, e.g. an object-store URI) is never
-memoized.
+a miss also drops every entry whose first path is gone (a deleted temp
+corpus). A dropped frame has its cut blocks released. An empty identity
+(nothing matches, e.g. an object-store URI) is never memoized.
+
+``cut`` is the one lineage cut, always lazy: the first job over the
+frame writes its blocks (under AQE, taking the cut already runs the cut
+plan's shuffle stages). ``release`` frees them early; Spark's
+ContextCleaner reclaims any other cut once its frame is garbage.
 """
 
 from __future__ import annotations
@@ -27,6 +32,8 @@ from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 _MEMO: dict[tuple, tuple] = {}
+# Called with each frame before ``cut`` cuts it (plans.checkpoint_audit).
+cut_recorders: list = []
 
 
 def corpus_id(sf_dir: str, pattern: str) -> tuple:
@@ -62,9 +69,17 @@ def memo(kind: str, cid: tuple, params: tuple, build):
             return hit[2]
     value = build()
     app = _app_id() if _frames(value) else None
-    stale = [k for k, e in _MEMO.items() if k[:2] == key[:2] and e[:2] != (cid, app)]
+    stale = [
+        k
+        for k, e in _MEMO.items()
+        if (k[:2] == key[:2] and e[:2] != (cid, app)) or not os.path.exists(k[1][0])
+    ]
     for k in stale:
-        _release(_MEMO.pop(k), app)
+        _cid, old_app, old = _MEMO.pop(k)
+        # Only in the live context: a dead context's blocks went with it.
+        if old_app is not None and old_app == _app_id():
+            for df in _frames(old):
+                release(df)
     _MEMO[key] = (cid, app, value)
     return value
 
@@ -80,13 +95,18 @@ def _frames(value) -> list:
     return [v for v in vals if isinstance(v, DataFrame)]
 
 
-def _release(entry: tuple, app) -> None:
-    """Unpersist the blocks of every superseded checkpoint frame — only
-    in the live context; a dead context's blocks went with it."""
-    _cid, entry_app, value = entry
-    if entry_app is None or entry_app != app:
-        return
-    for df in _frames(value):
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+def cut(df: DataFrame) -> DataFrame:
+    """``df`` with its lineage truncated at the blocks of its first run,
+    so every later job over the frame reuses them instead of recomputing
+    the plan."""
+    for record in cut_recorders:
+        record(df)
+    return df.localCheckpoint(eager=False)
+
+
+def release(df: DataFrame) -> None:
+    """Unpersist the blocks of a frame ``cut`` returned; any other frame
+    is left alone."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)

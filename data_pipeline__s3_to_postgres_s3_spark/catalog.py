@@ -161,8 +161,12 @@ def load_table(
 ) -> DataFrame:
     """``raw=True`` skips the representability gates — reserved for the
     corruption DETECTORS (key_uniqueness_report's census must see the
-    raw feed; its oracle is exempt from the mirror too)."""
+    raw feed; its oracle is exempt from the mirror too). ``events`` is
+    read with the nanosAsLong legacy conf, so a TIMESTAMP(NANOS) ``ts``
+    arrives as bigint for ``normalize_event_ts``."""
     _ensure_utc(spark)
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = _normalize_decimals(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     return df if raw else gate_feed(spark, sf_dir, name, df)
 
@@ -258,7 +262,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with a proper TIMESTAMP ``ts`` (see ``normalize_event_ts``
     for the encodings accepted) and ``ts``/``value`` gated to the
     representable ranges (``gate_feed``)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return load_table(spark, sf_dir, "events")
 
 

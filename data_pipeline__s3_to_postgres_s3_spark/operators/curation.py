@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import cut
 from ..catalog import load_events, load_table, scan_spread
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..session import local_frame
@@ -349,13 +350,12 @@ def line_dedup(
     (same pattern as chunk_documents, see CLAUDE.md)."""
     docs = load_table(spark, sf_dir, "documents")
     lines = line_frame(docs)
-    boiler = (
+    boiler = cut(
         lines.groupBy("norm")
         .agg(F.count_distinct("doc_id").alias("line_df"))
         .where(F.col("line_df") >= LINE_DF_CAP)
         .select("norm", F.lit(True).alias("is_bp"))
-        .localCheckpoint(eager=False)  # count() below materializes once
-    )
+    )  # count() below materializes once
     n_boiler = boiler.count()  # 1-row scalar (sanctioned collect class)
     right = F.broadcast(boiler) if n_boiler <= LINE_BC_MAX_ROWS else boiler
     flagged = lines.join(right, "norm", "left")
@@ -874,11 +874,10 @@ def source_overlap(
 
     docs = load_table(spark, sf_dir, "documents")
     sh = _shingle_arrays(docs, keys=("source",))
-    grouped = (
+    grouped = cut(
         sh.select("source", F.explode("shingles").alias("shingle"))
         .groupBy("shingle")
         .agg(F.array_sort(F.collect_set("source")).alias("srcs"))
-        .localCheckpoint(eager=False)
     )
     sz = (
         grouped.select(F.explode("srcs").alias("source"))
@@ -1170,11 +1169,10 @@ def curation_funnel(
     # replaces the separate count; the ≤5-row bucket frame is
     # lineage-cut (localCheckpoint) because it still feeds two tiny
     # consumers (the scalar total and the stage join).
-    buckets = (
+    buckets = cut(
         gated.select(first_fail.alias("stage_idx"))
         .groupBy("stage_idx")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)
     )
     # COALESCE: on an empty corpus the oracle's window-SUM chain yields
     # 0-valued n_in/n_out where a bare SUM goes NULL (r12 probe).
@@ -1254,10 +1252,9 @@ def source_unigram_kl(
             F.split(F.coalesce(F.col("text"), F.lit("")), " ")
         ).alias("w"),
     )
-    sw = (
+    sw = cut(
         toks.groupBy("source", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("c_sw"))
-        .localCheckpoint(eager=False)
     )
     ns = sw.groupBy("source").agg(
         F.sum("c_sw").cast("long").alias("n_tokens"),

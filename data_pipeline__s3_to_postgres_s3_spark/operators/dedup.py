@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import corpus_id, memo
+from ..cache import corpus_id, cut, memo
 from ..catalog import load_table, scan_spread
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..session import local_frame
@@ -166,7 +166,7 @@ def _ngram_inter(spark: SparkSession, sf_dir: str, df_cap: int) -> DataFrame:
         docs = scan_spread(
             spark, load_table(spark, sf_dir, "documents"), sf_dir, "documents"
         )
-        return _ngram_inter_counts(docs, df_cap).localCheckpoint()
+        return cut(_ngram_inter_counts(docs, df_cap))
 
     return memo(
         "ngram_inter", corpus_id(sf_dir, "documents.parquet"), (df_cap,), build
@@ -247,12 +247,13 @@ def dedup_jaccard_prefix(
     # The shingle frame feeds FOUR consumers (df census, prefix n-join, and
     # both verify sides): static exchange reuse does not fire across
     # join/explode branches (CLAUDE.md, the dedup_simhash lesson), so
-    # without the checkpoint the interpreted zip_with shingler re-executes
-    # per consumer. Measured at sf0.1: 6.2 s → 5.4 s warm, ~2× cold.
-    # (dedup_ngram_jaccard deliberately does NOT checkpoint: its arrays
-    # consumers are one explode + one array_size projection, both cheaper
-    # than the checkpoint write — measured neutral-to-worse.)
-    arrays = _shingle_arrays(docs).localCheckpoint(eager=False)
+    # without the cut the interpreted zip_with shingler re-executes per
+    # consumer. Measured at sf0.1: 6.2 s → 5.4 s warm, ~2× cold.
+    # (dedup_ngram_jaccard deliberately does NOT cut its arrays — only
+    # its memoized inter-counts frame: the arrays' consumers are one
+    # explode + one array_size projection, both cheaper than the cut's
+    # block write — measured neutral-to-worse.)
+    arrays = cut(_shingle_arrays(docs))
     sh = arrays.select("doc_id", F.explode("shingles").alias("shingle"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
 
@@ -753,14 +754,13 @@ def dedup_simhash(
     # both sides of the tier-1 sub-key join). Spark's static exchange
     # reuse does not fire across these branches, so without a barrier the
     # whole md5 signature pipeline executes once per consumer — 7
-    # exchanges in the round-4 plan, the repo maximum. localCheckpoint
+    # exchanges in the round-4 plan, the repo maximum. The cut
     # materializes the banded index once (~4 small rows per doc — the
     # index, not the corpus), cutting the executed plan to 3 exchanges +
     # 1 broadcast. Same pattern as graph.py's pointer-jumping rounds.
-    # (Eagerness measured a wash here in clean per-process A/B — ~6.5 s
-    # first call, ~2.5 s steady, either mode — so keep the house-default
-    # lazy checkpoint; see CLAUDE.md on order-confounded in-session A/Bs.)
-    buckets = buckets.localCheckpoint(eager=False)
+    # (Eager and lazy measured a wash here in clean per-process A/B —
+    # ~6.5 s first call, ~2.5 s steady — and cache.cut is always lazy.)
+    buckets = cut(buckets)
 
     # Tier 0: bounded buckets — in-array pair expansion.
     small_pairs = (
@@ -866,8 +866,8 @@ def minhash_estimate_audit(
     the per-pair comparison; the estimator join touches only candidate
     pairs (bucket-bounded), never all pairs."""
     docs = load_table(spark, sf_dir, "documents")
-    arrays = _shingle_arrays(docs).localCheckpoint(eager=False)
-    mins = minhash_mins(arrays).localCheckpoint(eager=False)
+    arrays = cut(_shingle_arrays(docs))
+    mins = cut(minhash_mins(arrays))
 
     n_bands = MINHASH_PERMS // MINHASH_BAND_ROWS
     band_cols = [
@@ -990,14 +990,16 @@ def exact_span_dedup(
     staged = docs.select("doc_id", F.split("text", " ").alias("ws"))
     k = SPAN_GRAM_TOKENS
     cat = ", ' ', ".join(f"element_at(ws, i + {j})" for j in range(k))
-    arrays = staged.select(
-        "doc_id",
-        F.expr(
-            f"IF(size(ws) >= {k}, "
-            f"transform(sequence(1, size(ws) - {k - 1}), "
-            f"i -> struct(i AS pos, md5(concat({cat})) AS g)), array())"
-        ).alias("grams"),
-    ).localCheckpoint(eager=False)  # feeds the census AND the match join
+    arrays = cut(  # feeds the census AND the match join
+        staged.select(
+            "doc_id",
+            F.expr(
+                f"IF(size(ws) >= {k}, "
+                f"transform(sequence(1, size(ws) - {k - 1}), "
+                f"i -> struct(i AS pos, md5(concat({cat})) AS g)), array())"
+            ).alias("grams"),
+        )
+    )
     grams = arrays.select(
         "doc_id", F.explode("grams").alias("s")
     ).select("doc_id", F.col("s.pos").alias("pos"), F.col("s.g").alias("g"))
@@ -1087,10 +1089,9 @@ def span_df_report(
     # branch; without the checkpoint fuse the subtree executes twice
     # (dedup_simhash lesson — checkpoint only when the shared subtree is
     # expensive AND re-executed, which the full-corpus gram census is).
-    per_doc = (
+    per_doc = cut(
         grams.groupBy("g", "doc_id", "source")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
     )
     per_gram = per_doc.groupBy("g").agg(
         F.count(F.lit(1)).alias("df"),

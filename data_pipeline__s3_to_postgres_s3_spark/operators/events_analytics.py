@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import cut
 from ..catalog import load_events
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.numeric import portable_round
@@ -98,15 +99,13 @@ def retention_cohorts(
     retention rate is a single int/int division, portable_round-ed at
     1e-6 on both sides."""
     ev = load_events(spark, sf_dir)
-    days = (
+    days = cut(
         ev.select("user_id", F.to_date("ts").alias("d"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    cohort = (
+    cohort = cut(
         days.groupBy("user_id")
         .agg(F.min("d").alias("cohort_day"))
-        .localCheckpoint(eager=False)
     )
     sizes = cohort.groupBy("cohort_day").agg(
         F.count(F.lit(1)).alias("cohort_size")
@@ -174,7 +173,7 @@ def item_cooccurrence(
     cap bounds the per-user explode exactly like the dedup DF caps bound
     posting lists."""
     ev = load_events(spark, sf_dir)
-    items = (
+    items = cut(
         ev.where(F.col("event_type").isin(*BASKET_EVENT_TYPES))
         .select(
             "user_id",
@@ -192,8 +191,7 @@ def item_cooccurrence(
         # r6 null-robustness probe caught the lift skew).
         .where(F.col("item").isNotNull() & F.col("user_id").isNotNull())
         .distinct()
-        .localCheckpoint(eager=False)  # feeds baskets, marginals, and N
-    )
+    )  # feeds baskets, marginals, and N
     baskets = items.groupBy("user_id").agg(
         F.slice(F.sort_array(F.collect_list("item")), 1, BASKET_ITEM_CAP).alias(
             "ks"
@@ -422,10 +420,9 @@ def active_users_rolling(
     raw events; both rollups are map-side-combined countDistincts. The
     frame feeds the DAU and WAU branches, so it is localCheckpoint'd."""
     ev = load_events(spark, sf_dir)
-    user_days = (
+    user_days = cut(
         ev.select("user_id", F.to_date("ts").alias("day"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     dau = user_days.groupBy("day").agg(
         F.countDistinct("user_id").alias("dau")

@@ -15,9 +15,12 @@ Scale notes (100 TB):
 - Every round is bounded work: one edges⋈labels join + one groupBy-min
   (both shuffle on node id, map-side combined) + one labels self-join.
   No collect of nodes or edges ever happens on the driver.
-- Iterative Spark jobs grow lineage without bound; each round ends in
-  an eager localCheckpoint() that truncates the plan — without it,
-  round N replays rounds 1..N-1 and the job goes quadratic.
+- Iterative Spark jobs grow lineage without bound; each round's labels
+  are lineage-cut (cache.cut) — without it, round N replays rounds
+  1..N-1 and the job goes quadratic. The cut is lazy: the round's
+  convergence sum is the job that materializes it, after which the
+  superseded round's blocks are released, so only the returned labels
+  keep blocks.
 - Convergence is detected from a 1-row aggregate: component labels only
   ever decrease, so sum(comp) is strictly monotone until fixpoint —
   an unchanged sum IS convergence (no per-row diff join needed).
@@ -28,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..cache import corpus_id, memo
+from ..cache import corpus_id, cut, memo, release
 from ..catalog import load_table
 from ..config import DEFAULT_CONFIG, EngineConfig
 
@@ -50,7 +53,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "minhash_pairs",
         corpus_id(sf_dir, "documents.parquet"),
         (),
-        lambda: dedup_minhash_lsh(spark, sf_dir).localCheckpoint(),
+        lambda: cut(dedup_minhash_lsh(spark, sf_dir)),
     )
 
 
@@ -84,44 +87,47 @@ def connected_components(edges: DataFrame, max_iter: int = CC_MAX_ITER) -> DataF
     # upstream plan that produced the pairs (for dedup_clusters that is the
     # full MinHash pipeline — shingling, signatures, banding, verification)
     # — turning an O(rounds · |E|) loop into O(rounds · corpus-scan).
-    sym = (
+    sym = cut(
         edges.select(F.col(u).alias("src"), F.col(v).alias("dst"))
         .union(edges.select(F.col(v).alias("src"), F.col(u).alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
-    lab = (
+    old = lab = cut(
         sym.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("comp"))
-        .localCheckpoint()
     )
-    prev_sum = lab.agg(F.sum("comp")).collect()[0][0]
-
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(lab, sym["dst"] == lab["node"])
-            .groupBy("src")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        prop = (
-            lab.join(nbr, lab["node"] == nbr["src"], "left")
-            .select(
+    try:
+        prev_sum = lab.agg(F.sum("comp")).collect()[0][0]
+        for _ in range(max_iter):
+            nbr = (
+                sym.join(lab, sym["dst"] == lab["node"])
+                .groupBy("src")
+                .agg(F.min("comp").alias("nbr_comp"))
+            )
+            prop = lab.join(nbr, lab["node"] == nbr["src"], "left").select(
                 "node",
                 F.least("comp", F.coalesce("nbr_comp", "comp")).alias("comp"),
             )
-        )
-        hop = prop.select(F.col("node").alias("c_node"), F.col("comp").alias("c_comp"))
-        lab = (
-            prop.join(hop, prop["comp"] == hop["c_node"])
-            .select("node", F.col("c_comp").alias("comp"))
-            .localCheckpoint()
-        )
-        cur_sum = lab.agg(F.sum("comp")).collect()[0][0]
-        if cur_sum == prev_sum:
-            return lab
-        prev_sum = cur_sum
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+            hop = prop.select(
+                F.col("node").alias("c_node"), F.col("comp").alias("c_comp")
+            )
+            old, lab = lab, cut(
+                prop.join(hop, prop["comp"] == hop["c_node"])
+                .select("node", F.col("c_comp").alias("comp"))
+            )
+            cur_sum = lab.agg(F.sum("comp")).collect()[0][0]
+            release(old)
+            if cur_sum == prev_sum:
+                return lab
+            prev_sum = cur_sum
+        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+    except BaseException:
+        release(old)
+        release(lab)
+        raise
+    finally:
+        release(sym)
 
 
 def dedup_clusters(
@@ -234,12 +240,11 @@ def item_triangles(
     (item, n_triangles)."""
     from .events_analytics import item_cooccurrence
 
-    edges = (
+    edges = cut(
         item_cooccurrence(spark, sf_dir, cfg)
         .where(F.col("n_users_both") >= COOC_TRIANGLE_MIN_USERS)
         .select(F.col("item_a").alias("a"), F.col("item_b").alias("b"))
-        .localCheckpoint(eager=False)  # three consumers in the wedge join
-    )
+    )  # three consumers in the wedge join
     return triangle_counts(edges)
 
 
@@ -363,10 +368,8 @@ def integer_pagerank(edges: DataFrame, iters: int = PR_ITERS) -> DataFrame:
     deg = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
-    ed = edges.join(deg, "src").localCheckpoint(eager=False)
-    nodes = deg.select(F.col("src").alias("item"), "deg").localCheckpoint(
-        eager=False
-    )
+    ed = cut(edges.join(deg, "src"))
+    nodes = cut(deg.select(F.col("src").alias("item"), "deg"))
     ranks = nodes.select(
         "item", F.lit(PR_SCALE).cast("long").alias("r")
     )

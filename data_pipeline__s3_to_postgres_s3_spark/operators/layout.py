@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import cut
 from ..catalog import load_table
 from ..config import DEFAULT_CONFIG, EngineConfig
 
@@ -255,19 +256,21 @@ def zorder_skip_estimate(
     divisions; the 1-row stats frame is lineage-cut for its two
     per-dimension consumers."""
     m = zorder_manifest(spark, sf_dir, cfg).where(F.col("file_id") != -1)
-    s = m.agg(
-        F.count(F.lit(1)).cast("long").alias("n_files"),
-        F.sum(
-            F.col("max_custkey") - F.col("min_custkey") + F.lit(1)
-        ).cast("long").alias("ck_ext"),
-        F.min("min_custkey").alias("ck_lo"),
-        F.max("max_custkey").alias("ck_hi"),
-        F.sum(
-            F.datediff("max_orderdate", "min_orderdate") + F.lit(1)
-        ).cast("long").alias("dt_ext"),
-        F.min("min_orderdate").alias("d_lo"),
-        F.max("max_orderdate").alias("d_hi"),
-    ).localCheckpoint(eager=False)
+    s = cut(
+        m.agg(
+            F.count(F.lit(1)).cast("long").alias("n_files"),
+            F.sum(
+                F.col("max_custkey") - F.col("min_custkey") + F.lit(1)
+            ).cast("long").alias("ck_ext"),
+            F.min("min_custkey").alias("ck_lo"),
+            F.max("max_custkey").alias("ck_hi"),
+            F.sum(
+                F.datediff("max_orderdate", "min_orderdate") + F.lit(1)
+            ).cast("long").alias("dt_ext"),
+            F.min("min_orderdate").alias("d_lo"),
+            F.max("max_orderdate").alias("d_hi"),
+        )
+    )
 
     def dim_row(name: str, ext: str, span: F.Column) -> DataFrame:
         span_l = span.cast("long")

@@ -26,6 +26,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import cut
 from ..catalog import TABLES, load_events, load_table, scan_spread
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.numeric import cents, portable_round
@@ -220,8 +221,6 @@ def profile_events(
 ) -> DataFrame:
     """Profile of the events feed (ts normalized first, so the profile is
     encoding-invariant like every other events consumer)."""
-    from ..catalog import load_events
-
     ev = load_events(spark, sf_dir).select(*PROFILE_EVENTS_COLS)
     return profile_table(ev, PROFILE_EVENTS_COLS)
 
@@ -418,7 +417,7 @@ def partition_stats_rollup(
     # Checkpointing the ~months-row partial frame pins the plan to ONE
     # scan (the dedup_simhash localCheckpoint precedent; the
     # materialized frame is dozens of rows at any corpus size).
-    months = months.localCheckpoint(eager=False)
+    months = cut(months)
     total = months.agg(
         F.coalesce(F.sum("n_rows"), F.lit(0)).cast("long").alias("n_rows"),
         F.coalesce(F.sum("n_priced"), F.lit(0)).cast("long").alias("n_priced"),
@@ -526,10 +525,7 @@ def table_column_stats(
     profile_table convention)."""
     stacks = []
     for name, cols in TABLE_STATS_SPECS:
-        if name == "events":
-            df = load_events(spark, sf_dir)
-        else:
-            df = load_table(spark, sf_dir, name)
+        df = load_table(spark, sf_dir, name)
         # Single-row-group sf files scan as ONE task; the stacked
         # pre-aggregate is the census's whole cost (6-8 s serialized at
         # local[32], measured r15) — spread the >=1 MB feeds across the
@@ -610,8 +606,6 @@ def schema_snapshot_report(
     metadata-only on parquet row-group stats. 10 rows out."""
     parts = []
     for name in TABLES:
-        if name == "events":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = load_table(spark, sf_dir, name, raw=True)
         col_list = ",".join(sorted(df.columns))
         parts.append(
@@ -666,7 +660,6 @@ def key_uniqueness_report(
     position distinction)."""
     from operator import and_
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     parts = []
     for name, keys in KEY_SPECS:
         # raw=True: the census is the corruption DETECTOR — it must see

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import cut
 from ..catalog import load_table
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.numeric import cents, portable_round
@@ -932,10 +933,9 @@ def top_supplier_by_revenue(
         & (F.col("l_shipdate") < F.lit("1998-04-01"))
     )
     rev_c = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
-    per_supp = (
+    per_supp = cut(
         li.groupBy("l_suppkey")
         .agg(F.sum(rev_c).alias("rev_c"))
-        .localCheckpoint(eager=False)
     )
     mx = per_supp.agg(F.max("rev_c").alias("mx"))
     supplier = load_table(spark, sf_dir, "supplier")
@@ -1021,10 +1021,9 @@ def part_revenue_concentration(
     until a consumer wants attributes."""
     li = load_table(spark, sf_dir, "lineitem")
     rev_c = cents(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
-    per_part = (
+    per_part = cut(
         li.groupBy("l_partkey")
         .agg(F.sum(rev_c).alias("rc"))
-        .localCheckpoint(eager=False)
     )
     tot = per_part.agg(
         F.sum("rc").alias("t"),

@@ -30,7 +30,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..cache import corpus_id, memo
+from ..cache import corpus_id, cut, memo
 from ..catalog import load_table
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..functions.numeric import portable_round
@@ -1033,10 +1033,9 @@ def similarity_recall_report(
     Determinism: the underlying top-K sets are deterministic (sims
     portable-rounded before ranking, id tie-breaks), so the
     intersection counts and the one recall division are exact."""
-    bf = (
+    bf = cut(
         similarity_bruteforce_topk(spark, sf_dir, cfg)
         .select("query_id", "vec_id")
-        .localCheckpoint(eager=False)
     )
     truth = bf.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_truth")
@@ -1877,10 +1876,9 @@ def pq_recall_report(
     lineage-cut once (localCheckpoint) so the per-method hit-joins don't
     re-execute its broadcast corpus scan."""
     emb = _embeddings(spark, sf_dir).select("vec_id", "embedding")
-    bf = (
+    bf = cut(
         _exact_l2_topk(emb)
         .select("query_id", "vec_id")
-        .localCheckpoint(eager=False)
     )
     truth = bf.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_truth")
@@ -2145,7 +2143,10 @@ _ANN_LEGACY_DIR_RE = re.compile(r"^[0-9a-f]{32}_\d+$")
 # local_frame) instead of PythonRDD-backed createDataFrame lists, and
 # _inline_centroids emits one parsed SQL literal (_sql_double joins the
 # surface) — content-identical, bumped per the mechanical discipline.
-_ANN_TRAINER_REV = 8
+# rev 9: _ensure_ann_delta's shared encode is cut through cache.cut
+# (the same lazy localCheckpoint) — content-identical, bumped per the
+# mechanical discipline.
+_ANN_TRAINER_REV = 9
 
 # Every function whose LOGIC determines persisted-artifact CONTENT or
 # layout (training, encoding, the base/delta split, the directory
@@ -2496,7 +2497,7 @@ def _ensure_ann_delta(
         # a row-local function of the trained tables, so per-segment
         # encodes were the same subtree executed once per segment. The
         # union-range encode runs once; each segment is a row-local
-        # vec_id filter of it. localCheckpoint pins the shared frame to
+        # vec_id filter of it. A lineage cut pins the shared frame to
         # one execution when more than one segment consumes it (the
         # dedup_simhash rule: checkpoint only when consumers would
         # re-execute an expensive subtree); |delta| rows materialize.
@@ -2506,7 +2507,7 @@ def _ensure_ann_delta(
             _ann_cell_subspaces(emb_all.where(union_rng), cent_rows, sub), cb
         )
         if len(missing) > 1:
-            encoded = encoded.localCheckpoint(eager=False)
+            encoded = cut(encoded)
     for (name, lo, hi), seg_dir in missing:
         if encoded is not None:
             seg = encoded.where(_rng(lo, hi))

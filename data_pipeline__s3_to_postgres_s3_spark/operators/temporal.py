@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import cut
 from ..catalog import load_events
 from ..config import DEFAULT_CONFIG, EngineConfig
 
@@ -172,13 +173,12 @@ def events_gapfill_locf(
     from ..functions.numeric import cents
 
     ev = load_events(spark, sf_dir)
-    hourly = (
+    hourly = cut(
         ev.groupBy("user_id", F.date_trunc("hour", F.col("ts")).alias("bucket_ts"))
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_events"),
             (F.sum(cents(F.col("value"))) / 100.0).alias("bucket_value"),
         )
-        .localCheckpoint(eager=False)
     )
     spans = hourly.groupBy("user_id").agg(
         F.min("bucket_ts").alias("lo"), F.max("bucket_ts").alias("hi")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import cut
 from ..catalog import load_table, scan_spread
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..session import local_frame
@@ -560,11 +561,13 @@ def token_budget_report(
     docs = load_table(spark, sf_dir, "documents")
     ws = F.array_size(F.split(F.col("text"), " "))
     bpe = F.regexp_count("text", F.lit(BPE_PATTERN))
-    per_cell = docs.groupBy("lang", "source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(ws).alias("ws_tokens"),
-        F.sum(bpe).alias("bpe_tokens"),
-    ).localCheckpoint(eager=False)
+    per_cell = cut(
+        docs.groupBy("lang", "source").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(ws).alias("ws_tokens"),
+            F.sum(bpe).alias("bpe_tokens"),
+        )
+    )
     total = per_cell.agg(F.sum("bpe_tokens").alias("t"))
     return per_cell.crossJoin(F.broadcast(total)).select(
         "lang",
@@ -1009,10 +1012,9 @@ def ngram_lm_perplexity(
     bg = _doc_bigrams(docs)
     # Per-doc bigram multiplicities: the ONLY corpus-scale explode, cut
     # once and reused by all four consumers below.
-    bgc = (
+    bgc = cut(
         bg.groupBy("doc_id", "w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("m"))
-        .localCheckpoint(eager=False)
     )
     c2 = bgc.groupBy("w1", "w2").agg(
         F.sum("m").cast("long").alias("c_bg")
@@ -1089,11 +1091,10 @@ def bigram_pmi_topk(
     quantized to micro-nats with identical token streams in both
     engines; the reported pmi is the exact integer/1e6 division."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (
+    pairs = cut(
         _doc_bigrams(docs)
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("long").alias("pair_count"))
-        .localCheckpoint(eager=False)
     )
     left = pairs.groupBy("w1").agg(
         F.sum("pair_count").cast("long").alias("c_left")
@@ -1198,10 +1199,9 @@ def heavy_hitters_cms(
             F.split(F.coalesce(F.col("text"), F.lit("")), " ")
         ).alias("token")
     ).where(F.col("token") != "")
-    tc = (
+    tc = cut(
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).cast("long").alias("exact_count"))
-        .localCheckpoint(eager=False)
     )
     entries = cms_entries()
     cells = (

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import cut
 from ..catalog import load_table
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..operators.curation import gopher_quality, quality_gate
@@ -147,9 +148,7 @@ def _chunk_write_account(
     n_docs_total: int,
     n_docs_gated: int,
 ) -> dict:
-    chunks = chunk_frame(kept, carry=("split", "lang")).localCheckpoint(
-        eager=False
-    )
+    chunks = cut(chunk_frame(kept, carry=("split", "lang")))
     (
         chunks.repartition(shard_tasks, "split", "lang")
         .sortWithinPartitions("doc_id", "chunk_idx")

@@ -19,6 +19,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from ..cache import cut_recorders
+
 
 def formatted_plan(df: DataFrame) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
@@ -93,11 +95,10 @@ def keyed_exchange_count(df: DataFrame) -> int:
 
 @contextlib.contextmanager
 def checkpoint_audit():
-    """Record plan metrics of every frame at the moment it is
-    localCheckpoint-ed (VERDICT r5 'What's wrong #2': checkpoints
-    truncate lineage, so post-hoc plan inspection counts only
-    post-checkpoint exchanges — understating exactly the queries that
-    were expensive enough to checkpoint).
+    """Record plan metrics of every frame at the moment ``cache.cut``
+    cuts it (VERDICT r5 'What's wrong #2': cuts truncate lineage, so
+    post-hoc plan inspection counts only post-cut exchanges —
+    understating exactly the queries that were expensive enough to cut).
 
     Usage::
 
@@ -105,46 +106,28 @@ def checkpoint_audit():
             df = some_query(spark, sf_dir)
         true_exch = plans.exchange_count(df) + sum(c["exch"] for c in ckpts)
 
-    Each record is the ORIGIN plan of one checkpoint call, measured
-    before truncation; a later checkpoint whose lineage builds on an
-    earlier one is itself already truncated, so summing never double
-    counts. Iterative operators (pointer-jumping CC, kmeans) checkpoint
-    once per round during construction — every round's record appears,
-    which is the honest end-to-end cost. Diagnostic/test use only (the
-    patch is process-global while active)."""
+    Each record is the ORIGIN plan of one cut, measured before
+    truncation; a later cut whose lineage builds on an earlier one is
+    itself already truncated, so summing never double counts. Iterative
+    operators (pointer-jumping CC) cut once per round during
+    construction — every round's record appears, which is the honest
+    end-to-end cost. A memo hit makes no cut and leaves no record."""
     records: list[dict] = []
-    # Spark 4 routes instances through pyspark.sql.classic.dataframe.
-    # DataFrame, which OVERRIDES the abstract base's localCheckpoint —
-    # patch every class in play so the audit can't silently miss calls.
-    targets = [DataFrame]
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as _ClassicDF
 
-        targets.append(_ClassicDF)
-    except ImportError:  # pre-Connect Spark: one class only
-        pass
-    origs = {t: t.localCheckpoint for t in targets}
+    def record(df: DataFrame) -> None:
+        records.append(
+            {
+                "exch": exchange_count(df),
+                "bhj": broadcast_join_count(df),
+                "smj": sortmerge_join_count(df),
+            }
+        )
 
-    def make_patched(orig):
-        def patched(self, eager: bool = True):
-            records.append(
-                {
-                    "exch": exchange_count(self),
-                    "bhj": broadcast_join_count(self),
-                    "smj": sortmerge_join_count(self),
-                }
-            )
-            return orig(self, eager=eager)
-
-        return patched
-
-    for t in targets:
-        t.localCheckpoint = make_patched(origs[t])  # type: ignore[method-assign]
+    cut_recorders.append(record)
     try:
         yield records
     finally:
-        for t in targets:
-            t.localCheckpoint = origs[t]  # type: ignore[method-assign]
+        cut_recorders.remove(record)
 
 
 def final_broadcast_join_count(df: DataFrame) -> int:

@@ -1,6 +1,8 @@
 """cache.py pins: one corpus identity, one memo.
 
-- a superseded checkpoint frame releases its executor blocks;
+- a superseded checkpoint frame releases its executor blocks, and so
+  does the frame of a corpus that was deleted;
+- building a memoized frame's plan writes no cut blocks (cuts are lazy);
 - an equal-valued config reaches the same memoized frame (the memo keys
   on the parameters a frame reads, never on object identity);
 - a corpus rewritten in place rebuilds the sql_script table plans;
@@ -102,6 +104,57 @@ def test_superseded_memo_frame_releases_checkpoint_blocks(
     _rewrite_in_place(os.path.join(d, "documents.parquet"))
     QUERIES[query](spark, d).count()
     assert rdds().size() <= before
+
+
+def _stored(spark) -> set[int]:
+    """Ids of the RDDs that hold cached blocks."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _cut_rdd(df) -> int:
+    return df._jdf.queryExecution().analyzed().rdd().id()
+
+
+def _ngram_frame(d: str):
+    """The memoized n-gram inter-counts frame of corpus ``d``."""
+    path = os.path.join(os.path.abspath(d), "documents.parquet")
+    (entry,) = [e for k, e in cache._MEMO.items() if k[:2] == ("ngram_inter", (path,))]
+    return entry[2]
+
+
+def test_memo_frame_of_a_deleted_corpus_is_released(spark, sf_small, tmp_path):
+    """A temp corpus deleted after use (verify_window --mutate builds one
+    per mutation) must not keep its memo frames and their blocks until
+    the process exits: the next miss drops them."""
+    a, b = tmp_path / "a", tmp_path / "b"
+    a.mkdir()
+    b.mkdir()
+    _copy_tables(sf_small, str(a), ["documents"])
+    _copy_tables(sf_small, str(b), ["documents"])
+    QUERIES["dedup_ngram_jaccard"](spark, str(a)).count()
+    gone = _cut_rdd(_ngram_frame(str(a)))
+    assert gone in _stored(spark)
+
+    shutil.rmtree(a)
+    QUERIES["dedup_ngram_jaccard"](spark, str(b)).count()
+    assert not [k for k in cache._MEMO if k[1][0].startswith(str(a))]
+    assert gone not in _stored(spark)
+
+
+def test_ngram_family_plans_store_nothing_and_share_one_census(
+    spark, sf_small, tmp_path
+):
+    """Building the three n-gram members' plans writes no cut blocks;
+    once they run, the one memoized census is the only new cached
+    frame."""
+    d = _copy_tables(sf_small, str(tmp_path), ["documents"])
+    names = ["dedup_ngram_jaccard", "dedup_containment", "jaccard_threshold_sweep"]
+    before = _stored(spark)
+    frames = [QUERIES[n](spark, d) for n in names]
+    assert _stored(spark) <= before
+    for df in frames:
+        df.count()
+    assert _stored(spark) - before == {_cut_rdd(_ngram_frame(d))}
 
 
 def test_equal_config_builds_each_memo_frame_once(

@@ -70,6 +70,31 @@ def test_no_fixpoint_raises(spark):
         connected_components(df, max_iter=1)
 
 
+def _stored(spark) -> set[int]:
+    """Ids of the RDDs that hold cached blocks."""
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_connected_components_keeps_blocks_only_for_returned_labels(spark):
+    """Each round's cut is released once the next round has materialized,
+    and the symmetrized edges once the loop ends: only the returned
+    labels keep blocks. A run that raises keeps none."""
+    from data_pipeline__s3_to_postgres_s3_spark import plans
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(63)], ["a", "b"])
+    before = _stored(spark)
+    with plans.checkpoint_audit() as ckpts:
+        lab = connected_components(df)
+    assert len(ckpts) >= 4  # sym, the seed labels and at least 2 rounds
+    rdd = lab._jdf.queryExecution().analyzed().rdd().id()
+    assert _stored(spark) - before == {rdd}
+
+    before = _stored(spark)
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(df, max_iter=1)
+    assert _stored(spark) - before == set()
+
+
 def test_triangle_counts_ordered_wedge_exactness(spark):
     """Hand graph: K4 on {1,2,3,4} (4 triangles, each node in 3) plus a
     pendant edge (5 in no triangle) and an open wedge 6-7, 7-8 (no

@@ -287,27 +287,39 @@ def test_process_memos_live_only_in_cache_module():
     assert not offenders, f"module-level memo outside cache.py: {offenders}"
 
 
+def _calls_outside(names: tuple[str, ...], module: str, helper: str) -> list[str]:
+    """Every package call of a function or method named in ``names``
+    (``f(...)`` or ``x.f(...)``) outside the body of the one sanctioned
+    ``helper`` in ``module`` (a path under the package), as path:line."""
+    import ast
+
+    pkg = REPO / "data_pipeline__s3_to_postgres_s3_spark"
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        allowed = set()
+        if path == pkg / module:
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name == helper:
+                    allowed = {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or id(node) in allowed:
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+            if name in names:
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    return offenders
+
+
 def test_local_frames_go_through_session_helper():
     """Driver-side row lists become DataFrames only through
     session.local_frame: a list-backed createDataFrame reads through a
     PythonRDD, so every job over it starts Python workers (the first one
     in a process forks the worker daemon, ~1.5 s). The helper's Arrow
     table plans as a LocalRelation instead."""
-    import ast
-
-    pkg = REPO / "data_pipeline__s3_to_postgres_s3_spark"
-    offenders = []
-    for path in sorted(pkg.rglob("*.py")):
-        if path == pkg / "session.py":
-            continue
-        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "createDataFrame"
-            ):
-                offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
-    assert not offenders, f"createDataFrame outside session.py: {offenders}"
+    offenders = _calls_outside(("createDataFrame",), "session.py", "local_frame")
+    assert not offenders, f"createDataFrame outside session.local_frame: {offenders}"
 
 
 def test_package_threads_start_only_in_elt_helper():
@@ -316,25 +328,18 @@ def test_package_threads_start_only_in_elt_helper():
     one place that starts threads, pipelines/elt.py:_concurrently, wraps
     each call in inheritable_thread_target(spark); no other package code
     may construct a Thread or a ThreadPoolExecutor."""
-    import ast
-
-    pkg = REPO / "data_pipeline__s3_to_postgres_s3_spark"
-    offenders = []
-    for path in sorted(pkg.rglob("*.py")):
-        tree = ast.parse(path.read_text(encoding="utf-8"))
-        allowed = set()
-        if path == pkg / "pipelines" / "elt.py":
-            for node in tree.body:
-                if isinstance(node, ast.FunctionDef) and node.name == "_concurrently":
-                    allowed = {id(n) for n in ast.walk(node)}
-        for node in ast.walk(tree):
-            if not isinstance(node, ast.Call) or id(node) in allowed:
-                continue
-            f = node.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
-            if name in ("Thread", "ThreadPoolExecutor"):
-                offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    offenders = _calls_outside(
+        ("Thread", "ThreadPoolExecutor"), "pipelines/elt.py", "_concurrently"
+    )
     assert not offenders, f"thread started outside elt._concurrently: {offenders}"
+
+
+def test_lineage_cuts_go_through_cache_cut():
+    """Every lineage cut is cache.cut: one eagerness (lazy, so building a
+    plan writes no cut blocks), one audit hook (plans.checkpoint_audit
+    records through it) and one release (cache.release)."""
+    offenders = _calls_outside(("localCheckpoint",), "cache.py", "cut")
+    assert not offenders, f"localCheckpoint outside cache.cut: {offenders}"
 
 
 _FEED_BOUNDS = ("1000000000000", "1970-01-01 00:00:00", "2100-01-01 00:00:00")

@@ -1172,6 +1172,9 @@ def test_trainer_source_change_requires_rev_bump():
         # one-parse centroid literal; _sql_double joins the surface
         # (content-identical).
         8: "85c6663ffab6c6929ddc730fc8464bad",
+        # rev 9: _ensure_ann_delta's shared encode goes through
+        # cache.cut (content-identical).
+        9: "05ba604489a4dab095840dbd6d37f6bf",
     }
     assert sim._ANN_TRAINER_REV in PINNED and (
         PINNED[sim._ANN_TRAINER_REV] == digest

@@ -140,6 +140,23 @@ def test_loader_always_yields_ltz(spark, encoded_dirs):
         assert dt == "timestamp", f"{name}: ts is {dt}, want timestamp"
 
 
+def test_load_table_reads_nanos_events_without_caller_conf(
+    spark, sf_small, tmp_path
+):
+    """load_table sets the nanosAsLong legacy conf itself for events, so a
+    TIMESTAMP(NANOS) ts reads whoever the caller is."""
+    from data_pipeline__s3_to_postgres_s3_spark.catalog import load_table
+
+    t = pq.read_table(f"{sf_small}/events.parquet")
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp("ns", tz="UTC")))
+    pq.write_table(t, str(tmp_path / "events.parquet"), version="2.6")
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    ev = load_table(spark, str(tmp_path), "events")
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+    assert _rows(ev) == _rows(load_events(spark, sf_small))
+
+
 # ---------------------------------------------------------------------------
 # Same philosophy for the embeddings table: the driver may re-encode
 # array<float> as array<double>; every similarity operator casts element-wise
